@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Queries execute into
   * the `noop` sink — a count() would let Catalyst drop unreferenced
@@ -14,20 +12,7 @@ object Bench {
     // comma-decimal default locale (de_DE) "%.3f" prints "1,234"
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // see Verify.scala: rung runs raise this so per-partition sorter
-    // arrays stay out of G1-humongous territory; AQE coalesces at
-    // small SF so the default (== cpus) is unchanged elsewhere.
-    val shufParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // untimed warmup: JVM/JIT, codegen compiler, parquet footer caches,
     // and the noop sink all initialize here instead of inside whichever
     // query happens to run first (it was absorbing ~5 s of one-time cost)

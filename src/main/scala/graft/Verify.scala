@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,23 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional trailing args: run only these queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Rung runs (sf30+) override this upward: with partitions == cpus a
-    // 300x fixture puts >10M rows in each shuffle partition, and the
-    // per-task sorter pointer arrays become 256MB+ G1-humongous
-    // allocations that OOM a 16g heap even though total data would
-    // spill fine. AQE (on by default) coalesces the excess partitions
-    // at small SF, so the override is free at gate scale.
-    val shufParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      // diagnosis runs set SPARK_GRAFT_UI=true to watch stages live
-      .config("spark.ui.enabled", sys.env.getOrElse("SPARK_GRAFT_UI", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

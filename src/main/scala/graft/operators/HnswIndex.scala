@@ -151,9 +151,9 @@ object HnswIndex {
         else {
           // Capture the round's edges with AQE OFF so the checkpoint
           // keeps the TopK merge exchange's hashpartitioning(layer,
-          // src) (PartProbe: AQE-on capture degrades it to
-          // UnknownPartitioning; AQE-off capture + AQE-on consumers
-          // keeps it). The next round's neighbor-of-neighbor self-join
+          // src) (AQE-on capture degrades it to UnknownPartitioning;
+          // AQE-off capture + AQE-on consumers keeps it, as TopKSpec's
+          // merge-output partitioning test pins). The next round's neighbor-of-neighbor self-join
           // keys its probe side by exactly (layer, src), so the
           // data-sized |E| re-exchange of the edge table disappears
           // from every subsequent NN-descent round. Conf restored

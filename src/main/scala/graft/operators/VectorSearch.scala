@@ -492,13 +492,6 @@ object VectorSearch {
                         w: Array[Array[Array[Double]]]): DataFrame =
     nearDupPairsLshBuckets(vectors, minCosine, hyperplaneBuckets(_, w))
 
-  /** Multi-table variant of nearDupPairsLsh: candidate pairs form
-    * inside ANY shared (table, bucket); duplicates collapse in the
-    * same max()-as-dedup aggregation before thresholding. */
-  def nearDupPairsLshMulti(vectors: DataFrame, minCosine: Double, bits: Int,
-                           tables: Int): DataFrame =
-    nearDupPairsLshBuckets(vectors, minCosine, multiTableBuckets(_, bits, tables))
-
   /** Shared multi-table near-dup skeleton over any per-table bucket
     * expression. The bucket self-join carries ONLY (tbl, bucket, id)
     * rows — never the vectors: shipping payloads through an L×-exploded

@@ -1278,7 +1278,7 @@ object CorpusQueries {
   }
 
   /** cl1's (docs, per-doc cell assignment) inputs — factored out so
-    * StagePlan can rebuild the tf stage below. */
+    * `graft.tools.Explain` can rebuild the tf stage below. */
   private[graft] def cl1DocsAsg(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
     val emb = Embed.embedDocs(docs, "text", HybridDim)
@@ -1302,27 +1302,21 @@ object CorpusQueries {
     (docs, asg)
   }
 
-  /** cl1's (cell_id, term, tf) stage — factored out so StagePlan can
-    * dump the checkpoint-interior plan. `preAgg = true` (the shipped
-    * form, r19): collapse token OCCURRENCES to per-document term
-    * counts map-side-aggregated BEFORE the assignment join, so the
-    * join probes and the downstream aggregation see |distinct
-    * (doc,term)| rows instead of every occurrence; the per-cell count
-    * becomes the identical sum of per-doc counts. `preAgg = false` is
-    * the r18 shape kept for the measured A/B (sf1 median-of-5 pairs:
-    * 7.27/8.62 → 6.00/5.99 s; sf0.1: 6.00 → 4.53 s). */
-  private[graft] def cl1TfFrame(docs: DataFrame, asg: DataFrame,
-                                preAgg: Boolean = true): DataFrame = {
-    val occ = graft.Dist.spread(docs)
+  /** cl1's (cell_id, term, tf) stage — factored out so
+    * `graft.tools.Explain stage:cl1_tf_stage` can dump the
+    * checkpoint-interior plan. Token OCCURRENCES collapse to
+    * per-document term counts, map-side-aggregated BEFORE the
+    * assignment join, so the join probes and the downstream aggregation
+    * see |distinct (doc,term)| rows instead of every occurrence; the
+    * per-cell count becomes the identical sum of per-doc counts (sf1
+    * median-of-5 pairs vs joining every occurrence: 7.27/8.62 →
+    * 6.00/5.99 s; sf0.1: 6.00 → 4.53 s). */
+  private[graft] def cl1TfFrame(docs: DataFrame, asg: DataFrame): DataFrame =
+    graft.Dist.spread(docs)
       .select(col("doc_id"), explode(Embed.tokens(col("text"))).as("term"))
-    if (preAgg)
-      occ.groupBy("doc_id", "term").agg(count(lit(1)).as("dtf"))
-        .join(asg, "doc_id")
-        .groupBy("cell_id", "term").agg(sum("dtf").as("tf"))
-    else
-      occ.join(asg, "doc_id")
-        .groupBy("cell_id", "term").agg(count(lit(1)).as("tf"))
-  }
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("dtf"))
+      .join(asg, "doc_id")
+      .groupBy("cell_id", "term").agg(sum("dtf").as("tf"))
 
   lazy val cl1Sql: String = {
     val cos = "list_dot_product(e.vec, c.cv) / " +
@@ -1721,17 +1715,15 @@ object CorpusQueries {
        |      sqrt(list_dot_product(counts, counts)), 6)) AS vec
        |  FROM ${p}c)""".stripMargin
 
-  /** CTE chain ending in `lexrank` + `vecrank` (v12's two retrieval
-    * arms at HybridArmK) — shared by the v12 fusion oracle and the rk1
-    * rank-agreement oracle. `qryWhere` (e.g. the % HybridSubMod subset
-    * filter) cuts the query set only — corpus-side CTEs are full. */
-  private def hybridArmCtes: String = hybridArmCtesW("")
-
   /** Shared cosine text for the dense-arm oracles (same op order as
     * VectorQueries' cosS / Spark's qn·vn convention). */
   private val hybridCosS = "list_dot_product(q.vec, d.vec) / " +
     "(sqrt(list_dot_product(q.vec, q.vec)) * sqrt(list_dot_product(d.vec, d.vec)))"
 
+  /** CTE chain ending in `lexrank` + `vecrank` (v12's two retrieval
+    * arms at HybridArmK) — shared by the v12 fusion oracle and the rk1
+    * rank-agreement oracle. `qryWhere` (e.g. the % HybridSubMod subset
+    * filter) cuts the query set only — corpus-side CTEs are full. */
   private def hybridArmCtesW(qryWhere: String): String = {
     val cos = hybridCosS
     s"""${hybridLexCtesW(qryWhere)},

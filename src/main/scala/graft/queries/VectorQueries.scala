@@ -1157,7 +1157,7 @@ object VectorQueries {
   // expected occupancy N_l/2^bits_l at every layer (see HnswIndex).
   // Layer-0 width is the N-ADAPTIVE pairBits(N) (the sf10 fix: a fixed
   // 6-bit layer 0 made candidate volume quadratic in N); the legacy
-  // constants below are the B=6 instance (any corpus ≤ 2048 vectors)
+  // HnswBits below is the B=6 instance (any corpus ≤ 2048 vectors)
   // kept for serving defaults and specs.
   def hnswBitsFor(bits: Int): Array[Int] =
     Array.tabulate(HnswMaxLevel + 1)(l => math.max(bits - 2 * l, 0))
@@ -1165,7 +1165,6 @@ object VectorQueries {
     bitsPerLayer.map(b => if (b == 0) 1 else RpTables) // bits=0 → one
                                                        // table IS all-pairs
   val HnswBits = hnswBitsFor(RpBitsPair)     // = (6, 4, 2, 0)
-  val HnswTables = hnswTablesFor(HnswBits)   // = (8, 8, 8, 1)
   // serving knobs at HnswTune's measured knee (sf0.1, edge cache warm):
   // (probes=2, beam=8, hUp=1, hZero=2) -> recall@5 = 1.000 at 4.9 s vs
   // the r9 config (1, 16, 2, 4) -> 0.925 at 6.9 s and the r8 single-

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.queries.VectorQueries
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-cost frontier for the hg2 HNSW serving path (r9 verdict
@@ -18,14 +17,7 @@ object HnswTune {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     // warm the edge cache + exact baseline OUTSIDE the timed region:
     // the sweep measures SERVING cost, the build is hg1's row

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.operators.{HnswIndex, IrMetrics, IvfIndex, Latency, VectorSearch}
 import graft.queries.VectorQueries
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Reference-parity latency artifact (r8 verdict task 7): the
@@ -56,14 +56,7 @@ object LatencyReport {
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
     val outPath = if (args.length > 1) args(1) else "LATENCY_sf1.json"
     val nQueries = if (args.length > 2) args(2).toInt else 128
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val corpus = VectorQueries.corpusVecs(spark, sfDir)
       .select("vec_id", "v").localCheckpoint()

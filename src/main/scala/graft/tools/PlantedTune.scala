@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.queries.VectorQueries
-import org.apache.spark.sql.SparkSession
 
 /** Sweep the planted-cluster geometry (hg6) for the regime where graph
   * hops demonstrably navigate: per (alpha, probes, beam), build the
@@ -17,14 +16,7 @@ object PlantedTune {
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val configs: Seq[(Double, Int, Int, Int)] =
       if (args.length > 1) args.drop(1).map { a =>
