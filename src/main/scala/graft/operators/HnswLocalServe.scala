@@ -31,106 +31,30 @@ import org.apache.spark.sql.DataFrame
   */
 final class HnswLocalServer(
     layerAdj: Array[Map[Long, Array[Long]]],   // index = layer
-    vectors: Map[Long, Array[Float]],
+    vectors: Map[Long, (Array[Float], Double)], // vec_id -> (v, ‖v‖)
     buckets: Map[(Int, Long), Array[Long]],
-    w: Array[Array[Array[Double]]],
-    entryCandidate: Option[(Int, Long)],       // (level, vec_id); None = empty shard
-    maxLevel: Int, probes: Int, beam: Int,
-    hopsUpper: Int, hopsZero: Int, k: Int) extends Serializable {
-
-  private def entry: Long = {
-    require(entryCandidate.nonEmpty,
-      "HnswLocalServer: cannot serve from an empty corpus")
-    entryCandidate.get._2
-  }
+    private[operators] val w: Array[Array[Array[Double]]],
+    // (level, vec_id); None = empty shard
+    private[operators] val entryPoint: Option[(Int, Long)],
+    private[operators] val maxLevel: Int, probes: Int,
+    private[operators] val beam: Int, private[operators] val hopsUpper: Int,
+    private[operators] val hopsZero: Int, private[operators] val k: Int)
+    extends Serializable {
 
   // masks with <= probes bits set: the multi-probe expansion
   // (VectorSearch.knnLshRpMultiProbeFrom's query-side xor set) —
   // shared combination enumeration, never a 2^bits scan (16M
   // iterations at the 24-bit adaptive-width cap)
-  private val probeMasks: Array[Long] =
+  private[operators] val probeMasks: Array[Long] =
     VectorSearch.probeMasks(w(0).length, probes).toArray
 
-  /** Sequential double fold, the exact order Vec.dot/DotProduct uses. */
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-  private def dotW(a: Array[Float], plane: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * plane(i); i += 1 }
-    s
-  }
-  private def norm(a: Array[Float]): Double = math.sqrt(dot(a, a))
-
-  /** Spark Round(HALF_UP) semantics on double — BigDecimal.valueOf
-    * (shortest-decimal), NOT new BigDecimal(double). */
-  private def round6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  private def bucketOf(qv: Array[Float], table: Array[Array[Double]]): Long = {
-    var b = 0L; var i = 0
-    while (i < table.length) {
-      if (dotW(qv, table(i)) >= 0.0) b |= (1L << i); i += 1
-    }
-    b
-  }
-
-  /** Top-`n` of `cands` by (key desc, id asc). */
-  private def top(cands: Iterable[(Long, Double)], n: Int): Array[Long] =
-    cands.toArray
-      .sortBy { case (id, sc) => (-sc, id) }
-      .take(n).map(_._1)
-
-  /** LSH-seeded beam entry points: the query's top-`beam` over the
-    * multi-probed buckets (unrounded score, vec_id tie-break) —
-    * knnLshRpMultiProbeFrom's semantics. */
-  private def seeds(qv: Array[Float], qn: Double): Array[Long] = {
-    val cand = scala.collection.mutable.LongMap.empty[Boolean]
-    var t = 0
-    while (t < w.length) {
-      val b0 = bucketOf(qv, w(t))
-      probeMasks.foreach { m =>
-        buckets.getOrElse((t, b0 ^ m), Array.empty[Long])
-          .foreach(id => cand.update(id, true))
-      }
-      t += 1
-    }
-    top(cand.keys.map { id =>
-      val v = vectors(id)
-      id -> dot(qv, v) / (qn * norm(v))
-    }, beam)
-  }
-
-  /** One HnswIndex.step: cursors move to the top-`width` of
-    * {cursors} ∪ {their layer-`l` neighbors} by round6(cosine). */
-  private def step(cur: Array[Long], layer: Int, qv: Array[Float],
-                   qn: Double, width: Int): Array[Long] = {
-    val adj = layerAdj(layer)
-    val cand = scala.collection.mutable.LongMap.empty[Boolean]
-    cur.foreach { n =>
-      cand.update(n, true)
-      adj.getOrElse(n, Array.empty[Long]).foreach(d => cand.update(d, true))
-    }
-    top(cand.keys.map { id =>
-      val v = vectors(id)
-      id -> round6(dot(qv, v) / (qn * norm(v)))
-    }, width)
-  }
-
-  // ---- shard-facing surface (ShardedHnswServer): the three owner-
-  // scoped lookups a router needs to drive the walk across a node-
-  // sharded fleet. Each answers only for keys THIS shard owns (its
-  // vectors, its nodes' adjacency rows, its vectors' bucket entries),
-  // so a fleet-wide union is exactly the single-node structure — and
-  // every score is computed by the one shard owning that vector, with
-  // the identical dot fold, so merges are order-independent.
-
-  /** This shard's best entry candidate: (level, vec_id) by the global
-    * (level desc, vec_id asc) order, None for an empty shard. */
-  private[operators] def entryPoint: Option[(Int, Long)] = entryCandidate
+  // ---- shard-facing surface (HnswLocalServer.walk): the three owner-
+  // scoped lookups the walk is made of. Each answers only for keys THIS
+  // shard owns (its vectors, its nodes' adjacency rows, its vectors'
+  // bucket entries), so a fleet-wide union is exactly the single-node
+  // structure — and every score is computed by the one shard owning
+  // that vector, with the identical dot fold, so merges are
+  // order-independent.
 
   /** Layer-`layer` out-neighbors of the ids this shard owns (ids
     * owned elsewhere contribute nothing — their owner answers). */
@@ -140,13 +64,13 @@ final class HnswLocalServer(
     ids.flatMap(n => adj.getOrElse(n, Array.empty[Long]))
   }
 
-  /** UNROUNDED cosine of `qv` against each owned id in `ids` —
-    * callers apply the walk's round6 exactly where the single-node
-    * path does (steps and final ranking, not seeds). */
+  /** UNROUNDED cosine of `qv` against each owned id in `ids` — the
+    * walk applies round6 where the distributed walk does (steps and
+    * final ranking, not seeds). */
   private[operators] def scoreOwned(qv: Array[Float], qn: Double,
                                     ids: Array[Long]): Array[(Long, Double)] =
     ids.flatMap { id =>
-      vectors.get(id).map(v => id -> dot(qv, v) / (qn * norm(v)))
+      vectors.get(id).map { case (v, vn) => id -> LocalServe.dot(qv, v) / (qn * vn) }
     }
 
   /** Members of LSH bucket (t, b) among this shard's vectors. */
@@ -156,44 +80,75 @@ final class HnswLocalServer(
   /** Serve one request: top-k (vec_id, score, rnk) for `qv` — the
     * exact result hg2's distributed walk produces for this query. */
   def search(qv: Array[Float]): Array[(Long, Double, Int)] = {
-    val qn = norm(qv)
-    // greedy descent, upper layers (k=1 per step)
-    var cur = Array(entry)
-    var l = maxLevel
-    while (l >= 1) {
-      var h = 0
-      while (h < hopsUpper) { cur = step(cur, l, qv, qn, 1); h += 1 }
-      l -= 1
-    }
-    // union the LSH seeds into the layer-0 beam; collect visited states
-    val visited = scala.collection.mutable.LongMap.empty[Boolean]
-    cur = (cur ++ seeds(qv, qn)).distinct
-    cur.foreach(visited.update(_, true))
-    var h = 0
-    while (h < hopsZero) {
-      cur = step(cur, 0, qv, qn, beam)
-      cur.foreach(visited.update(_, true))
-      h += 1
-    }
-    // result set: visited ∪ their layer-0 neighborhoods, top-k
-    val adj0 = layerAdj(0)
-    val cand = scala.collection.mutable.LongMap.empty[Boolean]
-    visited.foreachKey { n =>
-      cand.update(n, true)
-      adj0.getOrElse(n, Array.empty[Long]).foreach(d => cand.update(d, true))
-    }
-    cand.keys.map { id =>
-      val v = vectors(id)
-      id -> round6(dot(qv, v) / (qn * norm(v)))
-    }.toArray
-      .sortBy { case (id, sc) => (-sc, id) }
-      .take(k)
-      .zipWithIndex
-      .map { case ((id, sc), i) => (id, sc, i + 1) }
+    require(entryPoint.nonEmpty,
+      "HnswLocalServer: cannot serve from an empty corpus")
+    HnswLocalServer.walk(Array(this), entryPoint.get._2, qv)
   }
 }
 
 object HnswLocalServer {
+  import LocalServe.{dot, round, topK}
+
+  /** The HNSW request path over a fleet (one shard for a single node):
+    * the HnswIndex schedule — greedy width-1 descent of the upper
+    * layers, LSH seeds unioned into the layer-0 beam, `hopsZero` beam
+    * steps, then the top-k of visited ∪ their layer-0 neighbors.
+    * Adjacency comes from each cursor's owner shard and every cosine
+    * from its vector's owner, so the result is placement-independent;
+    * a candidate no shard can score (an edge or bucket naming an
+    * absent vec_id) fails the request. The schedule and planes are
+    * replicated, so the first shard's copy is every shard's. */
+  private[operators] def walk(shards: Array[HnswLocalServer], entry: Long,
+                              qv: Array[Float]): Array[(Long, Double, Int)] = {
+    val s = shards(0)
+    val qn = math.sqrt(dot(qv, qv))
+    def scores(ids: Array[Long]): Array[(Long, Double)] = {
+      val got = shards.iterator.flatMap(_.scoreOwned(qv, qn, ids)).toArray
+      if (got.length != ids.length) {
+        val scored = got.iterator.map(_._1).toSet
+        val missing = ids.filterNot(scored).head
+        throw new IllegalStateException(s"HNSW artifact: vec_id $missing " +
+          "is reachable through an edge or bucket but no shard holds its vector")
+      }
+      got
+    }
+    def withNeighbors(ids: Array[Long], layer: Int): Array[Long] =
+      (ids ++ shards.iterator.flatMap(_.neighborsOwned(ids, layer))).distinct
+    // HnswIndex.step: the top-`width` of {cursors} ∪ {their neighbors}
+    // by round6(cosine), (score desc, vec_id asc)
+    def step(cur: Array[Long], layer: Int, width: Int): Array[Long] =
+      topK(scores(withNeighbors(cur, layer))
+        .map { case (id, sc) => (id, round(sc, 6)) }, width).map(_._1)
+
+    var cur = Array(entry)
+    for (l <- s.maxLevel to 1 by -1; _ <- 0 until s.hopsUpper)
+      cur = step(cur, l, 1)
+    // LSH seeds: the query's top-`beam` over the multi-probed buckets on
+    // the UNROUNDED score — knnLshRpMultiProbeFrom's semantics
+    val seedCands = scala.collection.mutable.LongMap.empty[Boolean]
+    s.w.indices.foreach { t =>
+      val b0 = LocalServe.signBucket(s.w(t), qv)
+      s.probeMasks.foreach { m =>
+        shards.foreach(_.bucketMembersOwned(t, b0 ^ m)
+          .foreach(id => seedCands.update(id, true)))
+      }
+    }
+    val seeds = topK(scores(seedCands.keys.toArray), s.beam).map(_._1)
+    val visited = scala.collection.mutable.LongMap.empty[Boolean]
+    cur = (cur ++ seeds).distinct
+    cur.foreach(visited.update(_, true))
+    for (_ <- 0 until s.hopsZero) {
+      cur = step(cur, 0, s.beam)
+      cur.foreach(visited.update(_, true))
+    }
+    LocalServe.ranked(topK(scores(withNeighbors(visited.keys.toArray, 0))
+      .map { case (id, sc) => (id, round(sc, 6)) }, s.k))
+  }
+
+  /** The fleet's entry point: the best (level, vec_id) under the
+    * global (level desc, vec_id asc) order — HnswIndex.withLevels'. */
+  private[operators] def entryOf(cands: Iterable[(Int, Long)]): Option[(Int, Long)] =
+    cands.minByOption { case (lvl, id) => (-lvl, id) }
 
   /** Edge-ceiling multiplier over the corpus-row ceiling: a
     * degree-bounded HNSW holds ≤ M(12) edges per (node, layer) and
@@ -226,7 +181,8 @@ object HnswLocalServer {
     LocalServe.guard(edges.count(), "HNSW edge table",
       maxRows * HnswLocalServer.EdgeRowsPerVector)
     val vecs = corpus.select("vec_id", "v").collect().map { r =>
-      r.getLong(0) -> r.getSeq[Float](1).toArray
+      val v = r.getSeq[Float](1).toArray
+      r.getLong(0) -> (v, math.sqrt(dot(v, v)))
     }.toMap
     val adj = Array.fill(maxLevel + 1)(
       scala.collection.mutable.HashMap.empty[Long,
@@ -238,19 +194,10 @@ object HnswLocalServer {
     // bucket directory + level assignment, driver-side
     val buckets = scala.collection.mutable.HashMap.empty[(Int, Long),
       scala.collection.mutable.ArrayBuffer[Long]]
-    vecs.foreach { case (id, v) =>
-      var t = 0
-      while (t < w.length) {
-        var b = 0L; var i = 0
-        while (i < w(t).length) {
-          var s = 0.0; var j = 0
-          while (j < v.length) { s += v(j).toDouble * w(t)(i)(j); j += 1 }
-          if (s >= 0.0) b |= (1L << i)
-          i += 1
-        }
-        buckets.getOrElseUpdate((t, b),
+    vecs.foreach { case (id, (v, _)) =>
+      w.indices.foreach { t =>
+        buckets.getOrElseUpdate((t, LocalServe.signBucket(w(t), v)),
           scala.collection.mutable.ArrayBuffer.empty) += id
-        t += 1
       }
     }
     // entry point: smallest vec_id among max-level nodes
@@ -266,8 +213,7 @@ object HnswLocalServer {
         l
       }
     }
-    val entry = vecs.keys.toArray.map(id => (level(id), id))
-      .sortBy { case (lvl, id) => (-lvl, id) }.headOption
+    val entry = entryOf(vecs.keys.map(id => (level(id), id)))
     new HnswLocalServer(
       adj.map(_.map { case (s, ds) => s -> ds.toArray }.toMap),
       vecs,

@@ -50,8 +50,8 @@ final class HybridLocalServer(
     dfByTerm: java.util.HashMap[String, Long],
     nDocs: Long, avgdl: Double,
     buckets: java.util.HashMap[Long, Array[(Long, Array[Double], Double)]], // (tbl<<48)|bucket -> (vec, v, vn)
-    w: Array[Array[Array[Double]]], bits: Int,
-    armK: Int, fuseK: Int,
+    w: Array[Array[Array[Double]]],
+    private[operators] val armK: Int, private[operators] val fuseK: Int,
     // Per-request dense-candidate budget (r15 verdict task 5): the P99
     // tail IS dense-arm candidate volume (LATENCY_sf1 rho(ms,
     // dense_cands)=0.97, ~9.5k candidates at P99), so a bounded
@@ -64,63 +64,30 @@ final class HybridLocalServer(
     // parity with the distributed v19HybridAnn.
     denseCap: Int = Int.MaxValue) extends Serializable {
 
-  private val K1 = Bm25.K1
-  private val B = Bm25.B
-  private val dim = w(0)(0).length
-
-  private def round(x: Double, s: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  /** Embed.tokenHash's polyhash — delegated to the one shared
-    * implementation so supplementary (non-BMP) code points advance by
-    * Character.charCount exactly as the distributed path does. */
-  private def polyHash(t: String): Long =
-    graft.functions.PolyHash.hash(t, graft.functions.PolyHash.Base, Embed.HashMod)
-
-  private def tokens(q: String): Array[String] =
-    q.split(" ", -1).filter(_.nonEmpty)
-
-  /** Embed.withNorm driver-side: counts → L2 on raw counts → 6 dp. */
-  private def embed(toks: Array[String]): Array[Double] = {
-    val counts = new Array[Double](dim)
-    toks.foreach(t => counts((polyHash(t) % dim).toInt) += 1.0)
-    var nsq = 0.0; var i = 0
-    while (i < dim) { nsq += counts(i) * counts(i); i += 1 }
-    val nrm = math.sqrt(nsq)
-    val out = new Array[Double](dim)
-    i = 0
-    while (i < dim) { out(i) = round(counts(i) / nrm, 6); i += 1 }
-    out
-  }
-
-  /** Sequential double fold — the exact Vec.dot / DotProduct order. */
-  private def dot(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i) * b(i); i += 1 }
-    s
-  }
-
-  /** (id, score) top-k by (score desc, id asc). */
-  private def topK(m: java.util.HashMap[Long, Double], k: Int): Array[(Long, Double)] = {
-    val arr = new Array[(Long, Double)](m.size)
-    val it = m.entrySet().iterator(); var i = 0
-    while (it.hasNext) { val e = it.next(); arr(i) = (e.getKey, e.getValue); i += 1 }
-    val sorted = arr.sortBy { case (id, sc) => (-sc, id) }
-    sorted.take(k)
-  }
+  private[operators] val dim = w(0)(0).length
 
   /** One request: fused top-fuseK (doc_id, rrf_score, rnk). */
   def search(query: String): Array[(Long, Double, Int)] =
     searchWithStats(query)._1
 
-  /** Shard-facing lexical partials (ShardedHybridServer): for each
-    * query term THIS node's posting shard owns, the term's scored
-    * postings (doc_id, unrounded BM25 part). Shipping per-term parts
-    * — ≤ PostingCap rows/term, the same volume the single node scans —
-    * lets the router re-sum in ascending GLOBAL term order, so the
-    * sharded sum is bit-identical to the single-node sum (each term is
-    * owned by exactly one shard; no cross-shard add-order ambiguity). */
+  /** search + the request's exact work profile, for tail-latency
+    * attribution: `postingMass` = Σ posting-list lengths over the
+    * query's distinct matched terms (every BM25 partial the lexical
+    * arm scores), `denseCands` = distinct vectors scored by the probed
+    * LSH cells. Zipf term frequencies make postingMass heavy-tailed —
+    * a query containing a near-stopword term scores a large fraction
+    * of the corpus — which is the P99 driver LatencyReport measures. */
+  def searchWithStats(query: String): (Array[(Long, Double, Int)], Long, Long) =
+    HybridLocalServer.serve(Array(this), query)
+
+  /** Shard-facing lexical partials: for each query term THIS node's
+    * posting shard owns, the term's scored postings (doc_id, unrounded
+    * BM25 part) in the exact expression shape of Bm25.searchFromTf.
+    * Shipping per-term parts — ≤ PostingCap rows/term, the same volume
+    * the single node scans — lets the request path re-sum in ascending
+    * GLOBAL term order, so a sharded sum is bit-identical to the
+    * single-node sum (each term is owned by exactly one shard; no
+    * cross-shard add-order ambiguity). */
   private[operators] def lexTermParts(
       toks: Array[String]): Array[(String, Array[(Long, Double)])] =
     toks.distinct.sorted.flatMap { term =>
@@ -130,128 +97,30 @@ final class HybridLocalServer(
         val df = dfByTerm.get(term).toDouble
         val idf = math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
         Some(term -> plist.map { case (docId, tf, dl) =>
-          (docId, idf * (tf * (K1 + 1.0)) /
-            (tf + K1 * ((1.0 - B) + B * dl / avgdl)))
+          (docId, idf * (tf * (Bm25.K1 + 1.0)) /
+            (tf + Bm25.K1 * ((1.0 - Bm25.B) + Bm25.B * dl / avgdl)))
         })
       }
     }
 
-  /** Shard-facing dense candidates (ShardedHybridServer): every
-    * distinct vector in THIS node's share of the probed cells, with
-    * its cosine. UNCAPPED by design — a vector's score is the same
-    * whichever table's bucket admitted it, so router-side dedup
-    * reproduces the single-node candidate set exactly; the denseCap
-    * operating point is admission-ORDER-dependent and stays a
-    * single-node knob. */
-  private[operators] def denseCandidates(
-      toks: Array[String]): Array[(Long, Double)] = {
-    if (toks.isEmpty) return Array.empty
-    val qv = embed(toks)
-    val qn = math.sqrt(dot(qv, qv))
+  /** Shard-facing dense candidates: every distinct vector in THIS
+    * node's share of the probed cells (per table, the own sign bucket
+    * and then each hamming-1 flip), with its cosine, admitted in probe
+    * order until the node's `denseCap` is reached. */
+  private[operators] def denseCandidates(qv: Array[Double],
+                                         qn: Double): Array[(Long, Double)] = {
     val m = new java.util.HashMap[Long, Double]()
-    var t = 0
-    while (t < w.length) {
-      var b0 = 0L
-      var b = 0
-      while (b < bits) {
-        if (dot(qv, w(t)(b)) >= 0.0) b0 |= (1L << b)
-        b += 1
-      }
-      var p = -1
-      while (p < bits) {
-        val probed = if (p < 0) b0 else b0 ^ (1L << p)
-        val cell = buckets.get((t.toLong << 48) | probed)
+    w.indices.foreach { t =>
+      val b0 = LocalServe.signBucket(w(t), qv)
+      (-1 until w(t).length).foreach { p =>
+        val cell = buckets.get((t.toLong << 48) | (if (p < 0) b0 else b0 ^ (1L << p)))
         if (cell != null) cell.foreach { case (vecId, v, vn) =>
-          if (!m.containsKey(vecId)) m.put(vecId, dot(qv, v) / (qn * vn))
-        }
-        p += 1
-      }
-      t += 1
-    }
-    val out = new Array[(Long, Double)](m.size)
-    val it = m.entrySet().iterator(); var i = 0
-    while (it.hasNext) { val e = it.next(); out(i) = (e.getKey, e.getValue); i += 1 }
-    out
-  }
-
-  private[operators] def tokensOf(q: String): Array[String] = tokens(q)
-
-  /** search + the request's exact work profile, for tail-latency
-    * attribution: `postingMass` = Σ posting-list lengths over the
-    * query's distinct matched terms (every BM25 partial the lexical
-    * arm scores), `denseCands` = distinct vectors scored by the probed
-    * LSH cells. Zipf term frequencies make postingMass heavy-tailed —
-    * a query containing a near-stopword term scores a large fraction
-    * of the corpus — which is the P99 driver LatencyReport measures. */
-  def searchWithStats(query: String): (Array[(Long, Double, Int)], Long, Long) = {
-    val toks = tokens(query)
-    var postingMass = 0L
-
-    // ---- lexical arm: BM25 over the posting lists ----
-    val lexScores = new java.util.HashMap[Long, Double]()
-    toks.distinct.sorted.foreach { term =>
-      val plist = postings.get(term)
-      if (plist != null) {
-        postingMass += plist.length
-        val df = dfByTerm.get(term).toDouble
-        val idf = math.log(1.0 + (nDocs - df + 0.5) / (df + 0.5))
-        plist.foreach { case (docId, tf, dl) =>
-          val part = idf * (tf * (K1 + 1.0)) /
-            (tf + K1 * ((1.0 - B) + B * dl / avgdl))
-          lexScores.merge(docId, part, (a, b) => a + b)
+          if (!m.containsKey(vecId) && m.size < denseCap)
+            m.put(vecId, LocalServe.dot(qv, v) / (qn * vn))
         }
       }
     }
-    // round AFTER the sum (Bm25.searchFromTf's round(sum, 4))
-    val lexTop = {
-      val r = new java.util.HashMap[Long, Double]()
-      lexScores.forEach((id, sc) => r.put(id, round(sc, 4)))
-      topK(r, armK)
-    }
-
-    // ---- dense arm: multi-probe sign-LSH over the bucket directory ----
-    // A zero-token query has no embedding: the distributed path's
-    // explode of an empty token array drops it from the dense arm, so
-    // the serving path contributes no dense candidates either (an
-    // unguarded embed() would divide by a zero norm and NaN-sort).
-    val vecScores = new java.util.HashMap[Long, Double]()
-    val qv = if (toks.isEmpty) new Array[Double](dim) else embed(toks)
-    val qn = math.sqrt(dot(qv, qv))
-    var t = 0
-    while (toks.nonEmpty && t < w.length) {
-      var b0 = 0L
-      var b = 0
-      while (b < bits) {
-        if (dot(qv, w(t)(b)) >= 0.0) b0 |= (1L << b)
-        b += 1
-      }
-      var p = -1
-      while (p < bits) {
-        val probed = if (p < 0) b0 else b0 ^ (1L << p)
-        val cell = buckets.get((t.toLong << 48) | probed)
-        if (cell != null) cell.foreach { case (vecId, v, vn) =>
-          if (!vecScores.containsKey(vecId) && vecScores.size < denseCap)
-            vecScores.put(vecId, dot(qv, v) / (qn * vn))
-        }
-        p += 1
-      }
-      t += 1
-    }
-    val vecTop = topK(vecScores, armK)
-
-    // ---- RRF fusion (Hybrid.rrfFuse): 1/(60+rnk), sum, 6 dp ----
-    val rrf = new java.util.HashMap[Long, Double]()
-    lexTop.zipWithIndex.foreach { case ((id, _), i) =>
-      rrf.merge(id, 1.0 / (Hybrid.RrfK + (i + 1)), (a, b) => a + b) }
-    vecTop.zipWithIndex.foreach { case ((id, _), i) =>
-      rrf.merge(id, 1.0 / (Hybrid.RrfK + (i + 1)), (a, b) => a + b) }
-    val fusedAll = {
-      val r = new java.util.HashMap[Long, Double]()
-      rrf.forEach((id, sc) => r.put(id, round(sc, 6)))
-      topK(r, fuseK)
-    }
-    (fusedAll.zipWithIndex.map { case ((id, sc), i) => (id, sc, i + 1) },
-      postingMass, vecScores.size.toLong)
+    HybridLocalServer.entries(m)
   }
 }
 
@@ -263,20 +132,82 @@ object HybridLocalServer {
     * ~9-13k candidates from the hamming-1 probe expansion. Capping at
     * 2048 keeps every exact-match cell's candidates while shedding
     * that expansion tail: P99 9.0 → 2.3 ms at fused_agreement 0.886
-    * vs the uncapped batch-parity ranking. */
+    * vs the uncapped batch-parity ranking. A deployment that needs a
+    * latency SLO passes it as `fromArtifacts(denseCap = …)`; the
+    * default stays uncapped (bit-exact batch parity). */
   val TailBoundedDenseCap = 2048
 
-  /** The tail-bounded OPERATING POINT: same artifacts, same scoring,
-    * dense admission capped at [[TailBoundedDenseCap]]. The default
-    * `fromArtifacts` stays uncapped (bit-exact batch parity,
-    * HybridLocalServeSpec); deployments that need a latency SLO pick
-    * this point and accept the measured ~0.886 fusion agreement. */
-  def tailBounded(tf: DataFrame, ptf: DataFrame, cb: DataFrame,
-                  w: Array[Array[Array[Double]]],
-                  armK: Int, fuseK: Int,
-                  maxRows: Long = LocalServe.MaxRowsPerJvm): HybridLocalServer =
-    fromArtifacts(tf, ptf, cb, w, armK, fuseK,
-      denseCap = TailBoundedDenseCap, maxRows = maxRows)
+  /** The hybrid request path over a fleet (one shard for a single
+    * node):
+    *  - lexical: gather every shard's owned-term partials, re-sum them
+    *    in ascending global term order (the single-node add order),
+    *    round the sum to 4 dp (Bm25.searchFromTf's round(sum, 4)) and
+    *    keep the top-armK;
+    *  - dense: embed the query once, gather each shard's admitted
+    *    candidates and dedup by id — a vector's cosine is the same
+    *    whichever table's bucket admitted it, so the fleet-wide set is
+    *    the single node's. A zero-token query has no embedding: the
+    *    distributed path's explode of an empty token array drops it
+    *    from the dense arm, so it contributes no dense candidates here
+    *    either (an unguarded embed would divide by a zero norm and
+    *    NaN-sort);
+    *  - RRF (Hybrid.rrfFuse): 1/(60+rnk) per arm, summed, rounded to
+    *    6 dp, top-fuseK by (rrf_score desc, doc_id asc).
+    * Returns the fused rows, the posting mass and the dense-candidate
+    * count. */
+  private[operators] def serve(shards: Array[HybridLocalServer], query: String)
+      : (Array[(Long, Double, Int)], Long, Long) = {
+    val s = shards(0)
+    val toks = query.split(" ", -1).filter(_.nonEmpty)
+
+    var postingMass = 0L
+    val lex = new java.util.HashMap[Long, Double]()
+    shards.flatMap(_.lexTermParts(toks)).sortBy(_._1).foreach { case (_, parts) =>
+      postingMass += parts.length
+      parts.foreach { case (id, p) => lex.merge(id, p, (a, b) => a + b) }
+    }
+    val lexTop = new LocalServe.TopK(s.armK)
+    lex.forEach((id, sc) => lexTop.offer(id, LocalServe.round(sc, 4)))
+
+    val dense = new java.util.HashMap[Long, Double]()
+    if (toks.nonEmpty) {
+      val qv = embed(toks, s.dim)
+      val qn = math.sqrt(LocalServe.dot(qv, qv))
+      shards.foreach(_.denseCandidates(qv, qn).foreach { case (id, sc) =>
+        dense.putIfAbsent(id, sc) })
+    }
+    val vecTop = new LocalServe.TopK(s.armK)
+    dense.forEach((id, sc) => vecTop.offer(id, sc))
+
+    val rrf = new java.util.HashMap[Long, Double]()
+    Seq(lexTop, vecTop).foreach(_.result().zipWithIndex.foreach { case ((id, _), i) =>
+      rrf.merge(id, 1.0 / (Hybrid.RrfK + (i + 1)), (a, b) => a + b) })
+    val fused = new LocalServe.TopK(s.fuseK)
+    rrf.forEach((id, sc) => fused.offer(id, LocalServe.round(sc, 6)))
+    (LocalServe.ranked(fused.result()), postingMass, dense.size.toLong)
+  }
+
+  /** Embed.withNorm driver-side: bucket counts of the Embed.tokenHash
+    * polyhash (the one shared implementation, so supplementary code
+    * points advance by Character.charCount exactly as the distributed
+    * path does) → L2 norm on RAW counts → each element HALF_UP-rounded
+    * to 6 dp. */
+  private[graft] def embed(toks: Array[String], dim: Int): Array[Double] = {
+    val counts = new Array[Double](dim)
+    toks.foreach { t =>
+      val h = graft.functions.PolyHash.hash(t, graft.functions.PolyHash.Base, Embed.HashMod)
+      counts((h % dim).toInt) += 1.0
+    }
+    val nrm = math.sqrt(LocalServe.dot(counts, counts))
+    counts.map(c => LocalServe.round(c / nrm, 6))
+  }
+
+  private def entries(m: java.util.HashMap[Long, Double]): Array[(Long, Double)] = {
+    val out = new Array[(Long, Double)](m.size)
+    var i = 0
+    m.forEach { (id, sc) => out(i) = (id, sc); i += 1 }
+    out
+  }
 
   /** Build from the SAME persisted artifacts the batch v19 serves
     * from: the Bm25 PRUNED posting table (bm25ptf — bounded lists are
@@ -298,7 +229,6 @@ object HybridLocalServer {
     // across serving nodes (LocalServe scaladoc's sharding seam).
     LocalServe.guard(cb.count(), "hybrid dense bucket directory", maxRows)
     LocalServe.guard(ptf.count(), "hybrid pruned posting table", maxRows)
-    val bits = w(0).length
     val postRows = ptf.select(col("term"), col("doc_id").cast("long"),
       col("tf").cast("long"), col("dl").cast("long")).collect()
     val postings = new java.util.HashMap[String, Array[(Long, Long, Long)]]()
@@ -326,7 +256,7 @@ object HybridLocalServer {
         dir.put(key, rows.map(r => (r.getLong(2),
           r.getSeq[Double](3).toArray, r.getDouble(4))).sortBy(_._1))
       }
-    new HybridLocalServer(postings, dfByTerm, nDocs, avgdl, dir, w, bits, armK, fuseK,
+    new HybridLocalServer(postings, dfByTerm, nDocs, avgdl, dir, w, armK, fuseK,
       denseCap)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Driver-side per-request IVF serving runtime (r12 verdict task 6) —
   * the IVF analog of HnswLocalServer.
@@ -35,53 +34,63 @@ import org.apache.spark.sql.functions.col
 final class IvfLocalServer(
     cents: Array[(Int, Array[Double], Double)], // (cell_id, cv, csq) sorted by id
     cells: Map[Int, Array[(Long, Array[Float], Double)]], // (vec_id, v, vn)
-    k: Int, nprobe: Int) extends Serializable {
-
-  /** Sequential double fold, the exact order Vec.dot/DotProduct uses. */
-  private def dotF(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-  private def dotFD(a: Array[Float], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i); i += 1 }
-    s
-  }
+    private[operators] val k: Int, nprobe: Int) extends Serializable {
+  import LocalServe.dot
 
   /** Per-request top-k on the UNROUNDED score — the merge currency of
-    * the sharded router (ShardedIvfServer): a shard's k best over its
-    * OWNED probed cells, ranked exactly as the single-node serve ranks
-    * (score desc, vec_id asc). The probe list is computed from the
-    * full (metadata-sized) centroid table every node holds, so N
-    * shards each scanning owned ∩ probed partition the single-node
-    * candidate set exactly. */
+    * [[IvfLocalServer.serve]]: a shard's k best over its OWNED probed
+    * cells, ranked exactly as the single-node serve ranks (score desc,
+    * vec_id asc). The probe list is computed from the full
+    * (metadata-sized) centroid table every node holds, so N shards
+    * each scanning owned ∩ probed partition the single-node candidate
+    * set exactly. */
   def topUnrounded(qv: Array[Float]): Array[(Long, Double)] = {
-    val qsq = dotF(qv, qv)
+    val qsq = dot(qv, qv)
     val qn = math.sqrt(qsq)
     // probeCells: cdist = sqrt(max(qsq - 2*q·c + csq, 0)), rank by
-    // (cdist asc, cell_id asc), take nprobe
-    val probed = cents.map { case (cid, cv, csq) =>
-      (math.sqrt(math.max(qsq - 2.0 * dotFD(qv, cv) + csq, 0.0)), cid)
-    }.sortBy(identity).take(nprobe)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    probed.foreach { case (_, cid) =>
-      cells.getOrElse(cid, Array.empty[(Long, Array[Float], Double)])
-        .foreach { case (id, v, vn) => out += ((id, dotF(qv, v) / (qn * vn))) }
+    // (cdist asc, cell_id asc), take nprobe: the top-nprobe on -cdist
+    val probe = new LocalServe.TopK(nprobe)
+    cents.foreach { case (cid, cv, csq) =>
+      probe.offer(cid, -math.sqrt(math.max(qsq - 2.0 * dot(qv, cv) + csq, 0.0)))
     }
-    // rank on the UNROUNDED score with vec_id tie-break
-    out.toArray.sortBy { case (id, sc) => (-sc, id) }.take(k)
+    val top = new LocalServe.TopK(k)
+    probe.result().foreach { case (cid, _) =>
+      val cell = cells.getOrElse(cid.toInt, Array.empty[(Long, Array[Float], Double)])
+      var i = 0
+      while (i < cell.length) {
+        val c = cell(i)
+        top.offer(c._1, dot(qv, c._2) / (qn * c._3))
+        i += 1
+      }
+    }
+    top.result()
   }
 
   /** Serve one request: top-k (vec_id, score, rnk) for `qv` — the
-    * exact rows knnIvfAssigned produces for this query (round to 6 dp
-    * only on output, VectorSearch.topK's convention). */
+    * exact rows knnIvfAssigned produces for this query. */
   def search(qv: Array[Float]): Array[(Long, Double, Int)] =
-    topUnrounded(qv).zipWithIndex
-      .map { case ((id, sc), i) => (id, LocalServe.round6(sc), i + 1) }
+    IvfLocalServer.serve(Array(this), qv)
 }
 
 object IvfLocalServer {
+
+  /** The IVF request path over a fleet (one shard for a single node):
+    * the probed cells partition across shards, so the global top-k is
+    * a subset of the union of per-shard UNROUNDED top-k; merge it in
+    * the same (score desc, vec_id asc) order and round to 6 dp only on
+    * output (VectorSearch.topK's convention). */
+  private[operators] def serve(shards: Array[IvfLocalServer],
+                               qv: Array[Float]): Array[(Long, Double, Int)] = {
+    val top = new LocalServe.TopK(shards(0).k)
+    var s = 0
+    while (s < shards.length) {
+      val part = shards(s).topUnrounded(qv)
+      var i = 0
+      while (i < part.length) { top.offer(part(i)._1, part(i)._2); i += 1 }
+      s += 1
+    }
+    LocalServe.ranked(top.result().map { case (id, sc) => (id, LocalServe.round(sc, 6)) })
+  }
 
   /** Build the runtime from the persisted artifacts: one centroid
     * collect (cells × dim) and one assigned-corpus collect grouped
@@ -96,31 +105,15 @@ object IvfLocalServer {
     LocalServe.guard(assigned.count(), "IVF assigned corpus", maxRows)
     val cents = centroids.select("cell_id", "cv").collect().map { r =>
       val cv = r.getSeq[Double](1).toArray
-      var csq = 0.0; var i = 0
-      while (i < cv.length) { csq += cv(i) * cv(i); i += 1 }
-      (r.getInt(0), cv, csq)
+      (r.getInt(0), cv, LocalServe.dot(cv, cv))
     }.sortBy(_._1)
     val cellMap = assigned.select("cell_id", "vec_id", "v").collect()
       .map { r =>
         val v = r.getSeq[Float](2).toArray
-        var sq = 0.0; var i = 0
-        while (i < v.length) { sq += v(i).toDouble * v(i).toDouble; i += 1 }
-        (r.getInt(0), (r.getLong(1), v, math.sqrt(sq)))
+        (r.getInt(0), (r.getLong(1), v, math.sqrt(LocalServe.dot(v, v))))
       }
       .groupBy(_._1)
       .map { case (cid, rows) => cid -> rows.map(_._2).sortBy(_._1) }
     new IvfLocalServer(cents, cellMap, k, nprobe)
-  }
-
-  /** Convenience for specs: serve a whole query table through the
-    * local runtime, returning knnIvfAssigned's schema. */
-  def searchAll(server: IvfLocalServer, queries: DataFrame): DataFrame = {
-    val s = queries.sparkSession
-    import s.implicits._
-    queries.select(col("query_id"), col("qv")).collect().toSeq
-      .flatMap { r =>
-        server.search(r.getSeq[Float](1).toArray)
-          .map { case (id, sc, rnk) => (r.getLong(0), id, sc, rnk) }
-      }.toDF("query_id", "vec_id", "score", "rnk")
   }
 }

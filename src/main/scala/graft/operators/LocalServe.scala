@@ -18,9 +18,29 @@ package graft.operators
   * i loads cells with hash(cell_id) % N == i), so each node holds
   * ~1/N of the corpus and a stateless router fans a request to the
   * node(s) owning its probed cells / matched terms, merging the
-  * per-node top-k — the standard distributed-ANN serving layout. No
-  * artifact or scoring change is needed to shard: only WHICH keys a
-  * node loads.
+  * per-node top-k — the standard distributed-ANN serving layout
+  * (REPOSE: per-partition local top-k, then one merge). No artifact or
+  * scoring change is needed to shard: only WHICH keys a node loads.
+  *
+  * A single node is a one-shard fleet: each family's request path is
+  * written once, against an array of shards, in its server's
+  * companion (`IvfLocalServer.serve`, `HnswLocalServer.walk`,
+  * `HybridLocalServer.serve`); `Local*Server.search` passes
+  * `Array(this)` and the `Sharded*Server` routers pass their shards,
+  * so both reach the path with the same types and share its compiled
+  * code.
+  *
+  * Beside the guard, this object is the serving kernel every tier
+  * scores and ranks with: the sequential dot folds in DotProduct's
+  * order, Spark's HALF_UP round, the LSH sign bucket, and a
+  * bounded-heap top-k in the serving rank order. It is stateless (a
+  * [[LocalServe.TopK]] belongs to the one request that made it), so
+  * any number of request threads may share it and the immutable
+  * servers built on it. Its per-candidate loops take arrays and
+  * primitives, not closures or iterators: the kernel is shared by
+  * every tier, and a call site that sees a different closure or
+  * iterator class per tier compiles differently depending on which
+  * tier warmed it first.
   */
 object LocalServe {
 
@@ -42,9 +62,122 @@ object LocalServe {
         "ShardedHnswServer) and route each request to the nodes " +
         "owning its probed keys.")
 
-  /** Spark Round(HALF_UP) semantics on double — the output rounding
-    * every serving tier shares with its batch contract. */
-  private[operators] def round6(x: Double): Double =
+  /** Sequential double fold, the exact order Vec.dot/DotProduct uses
+    * (every element widened to double before the multiply). */
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+  def dot(a: Array[Float], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i).toDouble * b(i); i += 1 }
+    s
+  }
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** Spark Round(HALF_UP) semantics on double — BigDecimal.valueOf
+    * (shortest decimal), NOT new BigDecimal(double). */
+  def round(x: Double, scale: Int): Double =
     java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Sign-LSH bucket of one vector under one table of hyperplanes:
+    * bit i is set iff the vector's dot fold against `planes(i)` is
+    * `>= 0`. */
+  def signBucket(planes: Array[Array[Double]], v: Array[Float]): Long = {
+    var b = 0L; var i = 0
+    while (i < planes.length) {
+      if (dot(v, planes(i)) >= 0.0) b |= (1L << i); i += 1
+    }
+    b
+  }
+  def signBucket(planes: Array[Array[Double]], v: Array[Double]): Long = {
+    var b = 0L; var i = 0
+    while (i < planes.length) {
+      if (dot(v, planes(i)) >= 0.0) b |= (1L << i); i += 1
+    }
+    b
+  }
+
+  /** The serving rank order: score desc, then id asc — the ordering
+    * `sortBy { case (id, sc) => (-sc, id) }` uses (the total order on
+    * doubles: NaN scores rank last, 0.0 before -0.0). True iff
+    * (aId, aSc) ranks strictly before (bId, bSc). */
+  private def before(aId: Long, aSc: Double, bId: Long, bSc: Double): Boolean = {
+    val c = java.lang.Double.compare(-aSc, -bSc)
+    c < 0 || (c == 0 && aId < bId)
+  }
+
+  /** A `k`-bounded top-k over (id, score) offers, in rank order: a
+    * binary heap on two primitive arrays whose root is the worst kept
+    * candidate. A request's candidates go straight from its scoring
+    * loop into the heap — no tuple, iterator or comparator object per
+    * candidate — and [[result]] is the first `k` of everything
+    * offered, as `sortBy { case (id, sc) => (-sc, id) }.take(k)`
+    * would rank it. One instance serves one request. */
+  final class TopK(k: Int) {
+    private val cap = math.max(k, 0)
+    private val ids = new Array[Long](cap)
+    private val scs = new Array[Double](cap)
+    private var n = 0
+
+    // heap order: a parent ranks after both children
+    private def after(i: Int, j: Int): Boolean = before(ids(j), scs(j), ids(i), scs(i))
+    private def swap(i: Int, j: Int): Unit = {
+      val id = ids(i); ids(i) = ids(j); ids(j) = id
+      val sc = scs(i); scs(i) = scs(j); scs(j) = sc
+    }
+    private def down(size: Int): Unit = {
+      var i = 0
+      var more = true
+      while (more) {
+        val l = 2 * i + 1
+        val r = l + 1
+        var w = i
+        if (l < size && after(l, w)) w = l
+        if (r < size && after(r, w)) w = r
+        if (w == i) more = false else { swap(i, w); i = w }
+      }
+    }
+
+    def offer(id: Long, sc: Double): Unit =
+      if (n < cap) {
+        ids(n) = id; scs(n) = sc
+        var i = n
+        n += 1
+        while (i > 0 && after(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+      } else if (cap > 0 && before(id, sc, ids(0), scs(0))) {
+        ids(0) = id; scs(0) = sc
+        down(n)
+      }
+
+    /** The kept candidates, best first (empties the heap). */
+    def result(): Array[(Long, Double)] = {
+      val out = new Array[(Long, Double)](n)
+      while (n > 0) {
+        n -= 1
+        out(n) = (ids(0), scs(0))
+        ids(0) = ids(n); scs(0) = scs(n)
+        down(n)
+      }
+      out
+    }
+  }
+
+  /** The first `k` of `cands` in rank order through a [[TopK]]. */
+  def topK(cands: Array[(Long, Double)], k: Int): Array[(Long, Double)] = {
+    val top = new TopK(k)
+    var i = 0
+    while (i < cands.length) { top.offer(cands(i)._1, cands(i)._2); i += 1 }
+    top.result()
+  }
+
+  /** A ranked top-k as response rows (id, score, rnk), rnk from 1. */
+  def ranked(top: Array[(Long, Double)]): Array[(Long, Double, Int)] =
+    top.zipWithIndex.map { case ((id, sc), i) => (id, sc, i + 1) }
 }

@@ -18,8 +18,9 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * single-node directory). Metadata-sized state (the plane schedule,
   * the hop/beam schedule, the global entry point) replicates.
   *
-  * The router drives the unchanged walk SCHEDULE; shards answer the
-  * two per-hop lookups a walk is made of:
+  * The router drives the one walk (HnswLocalServer.walk, which the
+  * single node runs as a one-shard fleet); shards answer the two
+  * per-hop lookups a walk is made of:
   *  - adjacency: every cursor's out-neighbors come from the one shard
   *    owning that node (others return nothing) — per hop that ships
   *    O(beam · M) ids, KBs on a wire;
@@ -30,12 +31,10 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * Per layer-0 hop that is two fan-outs (neighbors, then scores of
   * the deduped frontier) — the real RPC shape of a distributed graph
   * walk; upper-layer descent is width-1 so those hops ship single
-  * ids. The router applies round6 exactly where the single node does
-  * (steps and final ranking, not LSH seeds) and breaks ties with the
-  * same (score desc, vec_id asc) order, so results are bit-identical
-  * to the single-node serve — ShardedHnswServeSpec pins parity with
-  * HnswLocalServer (itself pinned bit-exact to the distributed hg2
-  * walk) plus the over-ceiling unlock.
+  * ids. Because the single node runs the same walk, results are
+  * bit-identical to the single-node serve — ShardedHnswServeSpec pins
+  * parity with HnswLocalServer (itself pinned bit-exact to the
+  * distributed hg2 walk) plus the over-ceiling unlock.
   *
   * Entry point: each shard reports its best (level, vec_id) candidate
   * under the global (level desc, vec_id asc) order; the router takes
@@ -43,109 +42,14 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * so the same node wins.
   */
 final class ShardedHnswServer(
-    shards: IndexedSeq[HnswLocalServer],
-    w: Array[Array[Array[Double]]],
-    entry: Long,
-    maxLevel: Int, probes: Int, beam: Int,
-    hopsUpper: Int, hopsZero: Int, k: Int) extends Serializable {
+    shards: Array[HnswLocalServer], entry: Long) extends Serializable {
 
   def nShards: Int = shards.length
 
-  private val probeMasks: Array[Long] =
-    VectorSearch.probeMasks(w(0).length, probes).toArray
-
-  /** Sequential double fold, the exact order Vec.dot/DotProduct uses
-    * (only for the QUERY side here — corpus-vector math runs on the
-    * owning shard). */
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
-  }
-  private def dotW(a: Array[Float], plane: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { s += a(i).toDouble * plane(i); i += 1 }
-    s
-  }
-  private def norm(a: Array[Float]): Double = math.sqrt(dot(a, a))
-
-  private def round6(x: Double): Double = LocalServe.round6(x)
-
-  private def bucketOf(qv: Array[Float], table: Array[Array[Double]]): Long = {
-    var b = 0L; var i = 0
-    while (i < table.length) {
-      if (dotW(qv, table(i)) >= 0.0) b |= (1L << i); i += 1
-    }
-    b
-  }
-
-  private def top(cands: Iterable[(Long, Double)], n: Int): Array[Long] =
-    cands.toArray.sortBy { case (id, sc) => (-sc, id) }.take(n).map(_._1)
-
-  /** Fan a deduped id set to the fleet; each id is scored by the one
-    * shard owning its vector. */
-  private def scores(qv: Array[Float], qn: Double,
-                     ids: Array[Long]): Array[(Long, Double)] =
-    shards.iterator.flatMap(_.scoreOwned(qv, qn, ids)).toArray
-
-  /** One walk step across the fleet: neighbors from adjacency owners,
-    * scores from vector owners, round6 + (score desc, id asc) top as
-    * the single-node HnswLocalServer.step. */
-  private def step(cur: Array[Long], layer: Int, qv: Array[Float],
-                   qn: Double, width: Int): Array[Long] = {
-    val cand = (cur ++ shards.iterator
-      .flatMap(_.neighborsOwned(cur, layer))).distinct
-    top(scores(qv, qn, cand).map { case (id, sc) => id -> round6(sc) }, width)
-  }
-
-  /** LSH-seeded beam entry points: probed-bucket members unioned
-    * across each shard's own-vector directory, top-beam on the
-    * UNROUNDED score — knnLshRpMultiProbeFrom's semantics, identical
-    * to the single node's seeds(). */
-  private def seeds(qv: Array[Float], qn: Double): Array[Long] = {
-    val cand = scala.collection.mutable.LongMap.empty[Boolean]
-    var t = 0
-    while (t < w.length) {
-      val b0 = bucketOf(qv, w(t))
-      probeMasks.foreach { m =>
-        shards.foreach(_.bucketMembersOwned(t, b0 ^ m)
-          .foreach(id => cand.update(id, true)))
-      }
-      t += 1
-    }
-    top(scores(qv, qn, cand.keys.toArray), beam)
-  }
-
   /** Serve one request: top-k (vec_id, score, rnk) — the exact rows
     * the single-node server (and the distributed hg2 walk) produces. */
-  def search(qv: Array[Float]): Array[(Long, Double, Int)] = {
-    val qn = norm(qv)
-    var cur = Array(entry)
-    var l = maxLevel
-    while (l >= 1) {
-      var h = 0
-      while (h < hopsUpper) { cur = step(cur, l, qv, qn, 1); h += 1 }
-      l -= 1
-    }
-    val visited = scala.collection.mutable.LongMap.empty[Boolean]
-    cur = (cur ++ seeds(qv, qn)).distinct
-    cur.foreach(visited.update(_, true))
-    var h = 0
-    while (h < hopsZero) {
-      cur = step(cur, 0, qv, qn, beam)
-      cur.foreach(visited.update(_, true))
-      h += 1
-    }
-    val vis = visited.keys.toArray
-    val cand = (vis ++ shards.iterator
-      .flatMap(_.neighborsOwned(vis, 0))).distinct
-    scores(qv, qn, cand)
-      .map { case (id, sc) => (id, round6(sc)) }
-      .sortBy { case (id, sc) => (-sc, id) }
-      .take(k)
-      .zipWithIndex
-      .map { case ((id, sc), i) => (id, sc, i + 1) }
-  }
+  def search(qv: Array[Float]): Array[(Long, Double, Int)] =
+    HnswLocalServer.walk(shards, entry, qv)
 }
 
 object ShardedHnswServer {
@@ -166,17 +70,15 @@ object ShardedHnswServer {
                     maxRowsPerShard: Long = LocalServe.MaxRowsPerJvm)
       : ShardedHnswServer = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    val shards = (0 until nShards).map { i =>
+    val shards = Array.tabulate(nShards) { i =>
       HnswLocalServer.fromArtifacts(
         edges.filter(pmod(hash(col("src")), lit(nShards)) === lit(i)),
         corpus.filter(pmod(hash(col("vec_id")), lit(nShards)) === lit(i)),
         w, maxLevel, probes, beam, hopsUpper, hopsZero, k,
         maxRows = maxRowsPerShard)
     }
-    val entry = shards.flatMap(_.entryPoint)
-      .sortBy { case (lvl, id) => (-lvl, id) }
+    val entry = HnswLocalServer.entryOf(shards.flatMap(_.entryPoint))
     require(entry.nonEmpty, "sharded HNSW fleet: empty corpus")
-    new ShardedHnswServer(shards, w, entry.head._2,
-      maxLevel, probes, beam, hopsUpper, hopsZero, k)
+    new ShardedHnswServer(shards, entry.get._2)
   }
 }

@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * `hash(term) % N` of the pruned posting table and
   * `hash(tbl, bucket) % N` of the dense bucket directory (the two
   * keyed artifacts the LocalServe scaladoc names), fronted by a
-  * router that runs the fusion.
+  * router that runs the fusion — the one request path,
+  * HybridLocalServer.serve, which the single node runs as a one-shard
+  * fleet.
   *
   * What makes hybrid the interesting case:
   *  - the LEXICAL arm is not a top-k union: a document's BM25 score
@@ -36,23 +38,10 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * pins bit-exact parity with the single server and the batch
   * v19_hybrid_ann, plus the over-ceiling unlock.
   */
-final class ShardedHybridServer(
-    shards: IndexedSeq[HybridLocalServer],
-    armK: Int, fuseK: Int) extends Serializable {
+final class ShardedHybridServer(shards: Array[HybridLocalServer])
+    extends Serializable {
 
   def nShards: Int = shards.length
-
-  private def round(x: Double, s: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(s, java.math.RoundingMode.HALF_UP).doubleValue()
-
-  private def topK(m: java.util.HashMap[Long, Double],
-                   k: Int): Array[(Long, Double)] = {
-    val arr = new Array[(Long, Double)](m.size)
-    val it = m.entrySet().iterator(); var i = 0
-    while (it.hasNext) { val e = it.next(); arr(i) = (e.getKey, e.getValue); i += 1 }
-    arr.sortBy { case (id, sc) => (-sc, id) }.take(k)
-  }
 
   /** One request: fused top-fuseK (doc_id, rrf_score, rnk) — the
     * exact rows the single-node HybridLocalServer (and the batch
@@ -64,45 +53,8 @@ final class ShardedHybridServer(
     * candidates) — the same tail-attribution signature the single
     * node exposes, summed across the fleet. */
   def searchWithStats(query: String)
-      : (Array[(Long, Double, Int)], Long, Long) = {
-    val toks = shards.head.tokensOf(query)
-
-    // lexical: gather owned-term partials from every shard, re-sum in
-    // ascending global term order (single-node add order), round 4 dp
-    var postingMass = 0L
-    val lex = new java.util.HashMap[Long, Double]()
-    shards.flatMap(_.lexTermParts(toks)).sortBy(_._1).foreach {
-      case (_, parts) =>
-        postingMass += parts.length
-        parts.foreach { case (id, p) =>
-          lex.merge(id, p, (a, b) => a + b) }
-    }
-    val lexTop = {
-      val r = new java.util.HashMap[Long, Double]()
-      lex.forEach((id, sc) => r.put(id, round(sc, 4)))
-      topK(r, armK)
-    }
-
-    // dense: gather candidates, dedup by id (same score everywhere)
-    val dm = new java.util.HashMap[Long, Double]()
-    shards.foreach(_.denseCandidates(toks).foreach { case (id, sc) =>
-      if (!dm.containsKey(id)) dm.put(id, sc) })
-    val vecTop = topK(dm, armK)
-
-    // RRF fusion (Hybrid.rrfFuse): 1/(60+rnk), sum, 6 dp
-    val rrf = new java.util.HashMap[Long, Double]()
-    lexTop.zipWithIndex.foreach { case ((id, _), i) =>
-      rrf.merge(id, 1.0 / (Hybrid.RrfK + (i + 1)), (a, b) => a + b) }
-    vecTop.zipWithIndex.foreach { case ((id, _), i) =>
-      rrf.merge(id, 1.0 / (Hybrid.RrfK + (i + 1)), (a, b) => a + b) }
-    val fused = {
-      val r = new java.util.HashMap[Long, Double]()
-      rrf.forEach((id, sc) => r.put(id, round(sc, 6)))
-      topK(r, fuseK)
-    }
-    (fused.zipWithIndex.map { case ((id, sc), i) => (id, sc, i + 1) },
-      postingMass, dm.size.toLong)
-  }
+      : (Array[(Long, Double, Int)], Long, Long) =
+    HybridLocalServer.serve(shards, query)
 }
 
 object ShardedHybridServer {
@@ -120,13 +72,13 @@ object ShardedHybridServer {
                     maxRowsPerShard: Long = LocalServe.MaxRowsPerJvm)
       : ShardedHybridServer = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    val shards = (0 until nShards).map { i =>
+    val shards = Array.tabulate(nShards) { i =>
       HybridLocalServer.fromArtifacts(
         tf,
         ptf.filter(pmod(hash(col("term")), lit(nShards)) === lit(i)),
         cb.filter(pmod(hash(col("tbl"), col("bucket")), lit(nShards)) === lit(i)),
         w, armK, fuseK, maxRows = maxRowsPerShard)
     }
-    new ShardedHybridServer(shards, armK, fuseK)
+    new ShardedHybridServer(shards)
   }
 }

@@ -24,27 +24,21 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   *
   * Bit-exact parity with the single-node serve (and therefore with
   * the batch VectorSearch.knnIvfAssigned, whose parity
-  * IvfLocalServeSpec pins): the probed cells partition across shards,
+  * IvfLocalServeSpec pins): both run the one request path,
+  * IvfLocalServer.serve — the probed cells partition across shards,
   * each shard returns its k best on the UNROUNDED score, and the
-  * global top-k is a subset of the union of per-shard top-k — the
-  * router merges with the identical (score desc, vec_id asc) order
-  * and applies the shared HALF_UP round(_, 6) only on output.
+  * global top-k is a subset of the union of per-shard top-k.
   * ShardedIvfServeSpec pins parity, the over-ceiling unlock, and that
   * every shard still passes the per-JVM admission guard.
   */
-final class ShardedIvfServer(
-    shards: IndexedSeq[IvfLocalServer], k: Int) extends Serializable {
+final class ShardedIvfServer(shards: Array[IvfLocalServer]) extends Serializable {
 
   def nShards: Int = shards.length
 
   /** Serve one request: fan out to every shard (each scans only its
     * owned ∩ probed cells), merge the per-shard unrounded top-k. */
-  def search(qv: Array[Float]): Array[(Long, Double, Int)] = {
-    val merged = shards.iterator.flatMap(_.topUnrounded(qv)).toArray
-    merged.sortBy { case (id, sc) => (-sc, id) }
-      .take(k).zipWithIndex
-      .map { case ((id, sc), i) => (id, LocalServe.round6(sc), i + 1) }
-  }
+  def search(qv: Array[Float]): Array[(Long, Double, Int)] =
+    IvfLocalServer.serve(shards, qv)
 }
 
 object ShardedIvfServer {
@@ -62,23 +56,11 @@ object ShardedIvfServer {
                     maxRowsPerShard: Long = LocalServe.MaxRowsPerJvm)
       : ShardedIvfServer = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    val shards = (0 until nShards).map { i =>
+    val shards = Array.tabulate(nShards) { i =>
       IvfLocalServer.fromArtifacts(
         assigned.filter(pmod(col("cell_id"), lit(nShards)) === lit(i)),
         centroids, k, nprobe, maxRowsPerShard)
     }
-    new ShardedIvfServer(shards, k)
-  }
-
-  /** Convenience for specs: serve a whole query table through the
-    * sharded fleet, returning knnIvfAssigned's schema. */
-  def searchAll(server: ShardedIvfServer, queries: DataFrame): DataFrame = {
-    val s = queries.sparkSession
-    import s.implicits._
-    queries.select(col("query_id"), col("qv")).collect().toSeq
-      .flatMap { r =>
-        server.search(r.getSeq[Float](1).toArray)
-          .map { case (id, sc, rnk) => (r.getLong(0), id, sc, rnk) }
-      }.toDF("query_id", "vec_id", "score", "rnk")
+    new ShardedIvfServer(shards)
   }
 }

@@ -76,10 +76,7 @@ class HybridLocalServeSpec extends SparkSpec {
     // reproduce the server's bucket choice via a 1-token query: the
     // embedding has weight 1.0 in exactly bucket (hash % dim)
     val dim = CorpusQueries.HybridDim
-    val m = classOf[HybridLocalServer].getDeclaredMethod(
-      "embed", classOf[Array[String]])
-    m.setAccessible(true)
-    val emb = m.invoke(server, Array(t)).asInstanceOf[Array[Double]]
+    val emb = HybridLocalServer.embed(Array(t), dim)
     assert(emb((want % dim).toInt) == 1.0,
       s"token bucket mismatch: expected bucket ${want % dim}")
     assert(emb.count(_ != 0.0) == 1)
@@ -87,6 +84,9 @@ class HybridLocalServeSpec extends SparkSpec {
 
   test("dense-candidate budget: admits at most cap, default is uncapped " +
       "parity (r15 verdict task 5)") {
+    assert(HybridLocalServer.TailBoundedDenseCap == 2048,
+      "the named point must stay the LATENCY_sf1-measured cap " +
+        "(re-measure before moving it)")
     val qs = queries.collect().map(r => (r.getLong(0), r.getString(1)))
     // a cap at least as large as every request's candidate set is the
     // identity — bit-exact with the uncapped server on every query
@@ -110,23 +110,6 @@ class HybridLocalServeSpec extends SparkSpec {
     // the fixture must actually exercise the budget, or this test is vacuous
     assert(sawUncappedBigger,
       "no fixture query exceeded the tight cap; test saw no capping")
-  }
-
-  test("tailBounded is the named measured operating point: the 2048 cap, " +
-      "identical to an explicitly capped server (r17 verdict task 6)") {
-    assert(HybridLocalServer.TailBoundedDenseCap == 2048,
-      "the named point must stay the LATENCY_sf1-measured cap " +
-        "(re-measure before moving it)")
-    val named = HybridLocalServer.tailBounded(tf, ptf, artifacts._1,
-      artifacts._2, CorpusQueries.HybridArmK, CorpusQueries.HybridK)
-    val explicit = HybridLocalServer.fromArtifacts(tf, ptf, artifacts._1,
-      artifacts._2, CorpusQueries.HybridArmK, CorpusQueries.HybridK,
-      denseCap = HybridLocalServer.TailBoundedDenseCap)
-    queries.collect().map(_.getString(1)).foreach { text =>
-      val (rows, _, cands) = named.searchWithStats(text)
-      assert(cands <= HybridLocalServer.TailBoundedDenseCap)
-      assert(rows.toSeq == explicit.search(text).toSeq)
-    }
   }
 
   test("per-request latency is job-free in-process compute") {

@@ -57,6 +57,32 @@ class ShardedHnswServeSpec extends SparkSpec {
     }
   }
 
+  test("an edge to an absent vec_id fails the request in both servers, " +
+      "naming the id") {
+    // every layer-0 node also points at a vec_id with no vector, so the
+    // final candidate set (visited ∪ layer-0 neighbors) reaches it
+    val absent = 999999L
+    val broken = edges.select("layer", "src", "dst").union(
+      edges.filter(col("layer") === 0)
+        .select(col("layer"), col("src"), lit(absent).as("dst")).distinct())
+    def load(n: Int) = graft.operators.ShardedHnswServer.fromArtifacts(
+      broken, corpus, VectorQueries.rpWeightsPair,
+      VectorQueries.HnswMaxLevel, VectorQueries.HnswProbes,
+      VectorQueries.HnswBeam, VectorQueries.HnswHopsUpper,
+      VectorQueries.HnswHopsZero, VectorQueries.K, nShards = n)
+    val one = graft.operators.HnswLocalServer.fromArtifacts(
+      broken, corpus, VectorQueries.rpWeightsPair,
+      VectorQueries.HnswMaxLevel, VectorQueries.HnswProbes,
+      VectorQueries.HnswBeam, VectorQueries.HnswHopsUpper,
+      VectorQueries.HnswHopsZero, VectorQueries.K)
+    val qv = queries.limit(1).collect().head.getSeq[Float](1).toArray
+    Seq[Array[Float] => Array[(Long, Double, Int)]](one.search, load(3).search)
+      .foreach { search =>
+        val e = intercept[IllegalStateException](search(qv))
+        assert(e.getMessage.contains(s"vec_id $absent"), e.getMessage)
+      }
+  }
+
   test("an HNSW corpus the single-JVM guard refuses loads sharded") {
     val ceiling = corpus.count() - 1
     val refusal = intercept[IllegalArgumentException] { single(ceiling) }
