@@ -112,8 +112,7 @@ object Demo {
         qCached.filter(col("query_id") === qid), 5, 4).count())
     val latDf = measured.toDF("query_id", "latency_ms")
       .withColumn("path", lit("ivf_knn"))
-    val lp = operators.IrMetrics
-      .latencyPercentiles(latDf, "path", "latency_ms").head()
+    val lp = operators.Pcts.p50p95p99(latDf, Seq("path"), "latency_ms").head()
     println(f"serving latency (${measured.size} individually-served queries): " +
       f"P50=${lp.getDouble(1)}%.1f ms P95=${lp.getDouble(2)}%.1f ms " +
       f"P99=${lp.getDouble(3)}%.1f ms")

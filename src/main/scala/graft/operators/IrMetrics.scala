@@ -1,46 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** IR metrics + latency percentiles (SURVEY §2.6), replicating the
-  * reference's semantics:
+/** IR metrics (SURVEY §2.6), replicating the reference's semantics:
   *  - Recall@K = relevant_in_topk / k, averaged ONLY over queries with
   *    ≥1 relevant result (/root/reference/src/queries.py:262-294 skips
   *    zero-relevant queries before averaging);
   *  - NDCG@K = DCG/IDCG with rel/log2(pos+1), zero-IDCG queries counted
-  *    as 0 in the average (/root/reference/src/queries.py:296-352);
-  *  - P50/P95/P99 by linear interpolation on the sorted values
-  *    (/root/reference/src/metrics.py:13-42, numpy.percentile default).
+  *    as 0 in the average (the reference's src/queries.py:296-352).
   *
-  * The percentile is computed with an explicit sort+interpolate formula
-  * (not percentile_approx) so the DuckDB oracle matches bit-for-bit;
-  * collect_list per group is fine while groups fit an executor — at
-  * 100 TB swap in approx_percentile (documented SURVEY §5).
+  * The percentile-based statistics here (quartile banding,
+  * winsorization, MAD) take their exact interpolated cuts from
+  * Pcts.cuts; the latency P50/P95/P99 summary is Pcts.p50p95p99.
   */
 object IrMetrics {
-
-  private def interpRaw(sorted: Column, n: Column, q: Double): Column = {
-    val pos = (n - 1).cast("double") * q
-    val lo = floor(pos).cast("int")
-    val frac = pos - lo.cast("double")
-    val base = element_at(sorted, lo + 1)
-    when(frac === 0.0, base)
-      .otherwise(base + (element_at(sorted, lo + 2) - base) * frac)
-  }
-
-  private def interp(sorted: Column, n: Column, q: Double): Column =
-    round(interpRaw(sorted, n, q), 6)
-
-  /** Per-group P50/P95/P99 of `valueCol`. */
-  def latencyPercentiles(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
-    df.groupBy(groupCol)
-      .agg(array_sort(collect_list(col(valueCol))).as("s"), count(lit(1)).as("n"))
-      .select(col(groupCol),
-        interp(col("s"), col("n"), 0.50).as("p50"),
-        interp(col("s"), col("n"), 0.95).as("p95"),
-        interp(col("s"), col("n"), 0.99).as("p99"))
 
   /** Per-query recall@k from ranked results carrying a 0/1 `rel` column. */
   def recallPerQuery(ranked: DataFrame): DataFrame =
@@ -79,11 +54,8 @@ object IrMetrics {
     * can't give on skewed values. */
   def quartileDepth(df: DataFrame, groupCol: String,
                     valueCol: String): DataFrame = {
-    val cuts = df.groupBy(groupCol)
-      .agg(array_sort(collect_list(col(valueCol))).as("s"), count(lit(1)).as("n"))
-      .select(col(groupCol), interpRaw(col("s"), col("n"), 0.25).as("__c1"),
-        interpRaw(col("s"), col("n"), 0.50).as("__c2"),
-        interpRaw(col("s"), col("n"), 0.75).as("__c3"))
+    val cuts = Pcts.cuts(df, Seq(groupCol), valueCol,
+      Seq(0.25 -> "__c1", 0.50 -> "__c2", 0.75 -> "__c3")).drop("n")
     df.join(broadcast(cuts), groupCol)
       .withColumn("band",
         when(col(valueCol) <= col("__c1"), 0)
@@ -130,10 +102,8 @@ object IrMetrics {
     */
   def winsorize(df: DataFrame, groupCol: String, valueCol: String,
                 qLo: Double, qHi: Double): DataFrame = {
-    val cuts = df.groupBy(groupCol)
-      .agg(array_sort(collect_list(col(valueCol))).as("s"), count(lit(1)).as("n"))
-      .select(col(groupCol), interpRaw(col("s"), col("n"), qLo).as("__lo"),
-        interpRaw(col("s"), col("n"), qHi).as("__hi"))
+    val cuts = Pcts.cuts(df, Seq(groupCol), valueCol,
+      Seq(qLo -> "__lo", qHi -> "__hi")).drop("n")
     df.join(broadcast(cuts), groupCol)
       .withColumn("w_value",
         round(least(greatest(col(valueCol), col("__lo")), col("__hi")), 6))
@@ -154,16 +124,11 @@ object IrMetrics {
     * double operation order, so the counts are bit-deterministic.
     */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val g = df.groupBy(groupCol)
-      .agg(array_sort(collect_list(col(valueCol))).as("s"), count(lit(1)).as("n"))
-    val med = g.select(col(groupCol), interpRaw(col("s"), col("n"), 0.5).as("med"))
+    val med = Pcts.cuts(df, Seq(groupCol), valueCol, Seq(0.5 -> "med")).drop("n")
     val d = df.join(broadcast(med), groupCol)
       .withColumn("dev", abs(col(valueCol) - col("med")))
-    val mad = d.groupBy(groupCol)
-      .agg(min("med").as("med"),
-        array_sort(collect_list(col("dev"))).as("s"), count(lit(1)).as("n"))
-      .select(col(groupCol), col("med"), interpRaw(col("s"), col("n"), 0.5).as("mad"))
-    d.drop("med").join(broadcast(mad), groupCol)
+    val mad = Pcts.cuts(d, Seq(groupCol), "dev", Seq(0.5 -> "mad")).drop("n")
+    d.join(broadcast(mad), groupCol)
       .groupBy(groupCol)
       .agg(min("med").as("raw_med"), min("mad").as("raw_mad"),
         sum(when(col("dev") > lit(3.0) * lit(1.4826) * col("mad"), 1L)

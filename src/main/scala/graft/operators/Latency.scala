@@ -5,7 +5,7 @@ package graft.operators
   * summarizes with P50/P95/P99
   * (/root/reference/src/queries.py latency capture →
   * /root/reference/src/metrics.py:13-42). The distributed analogue of
-  * the summary is IrMetrics.latencyPercentiles; this closes the loop
+  * the summary is Pcts.p50p95p99; this closes the loop
   * on the MEASUREMENT side: run the serving action once per query,
   * stamp each with its wall-clock milliseconds, and hand the result
   * to the percentile operator.

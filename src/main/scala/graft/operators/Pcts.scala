@@ -4,74 +4,93 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact per-group percentiles over an INTEGER value column without
-  * ever sorting rows: the distribution collapses to a VALUE HISTOGRAM
-  * (group, value, count) — cardinality = distinct values, not rows —
-  * and percentile ranks are read off the histogram's running count.
-  * The per-group window runs over the collapsed histogram (thousands
-  * of rows per group at any corpus size), so this stays exact where a
-  * sketch (m4) approximates and global where a collect_list (m1)
-  * cannot go. Interpolation is numpy-style linear in m1/m11's exact
-  * double op order: lo + (hi − lo) · frac, integer subtraction first.
+/** The one exact percentile: numpy-style linear interpolation on the
+  * sorted values (the reference's src/metrics.py:13-42, the
+  * numpy.percentile default), in Spark and in the DuckDB oracle text.
   *
-  * Returns one row per group: groupCol, n, p50, p95, p99 (6 dp).
+  * One algorithm, never sorting rows: the distribution collapses to a
+  * VALUE HISTOGRAM (groups, value, count) — cardinality = distinct
+  * values, not rows — a running count over it places every rank, and
+  * one conditional aggregate per group picks the values at the ranks
+  * each quantile needs. Any numeric value column works.
+  *
+  * Null values are ignored: they form no histogram bucket and `n`
+  * counts only non-null values.
+  *
+  * No group columns means one global group. Its running count goes
+  * through Dist.runningTotal — the range-partitioned prefix scan —
+  * because a window with no partition key drags the whole value
+  * histogram through one task (millions of distinct ms durations at
+  * scale). The prefix sums are exact integers over the same total
+  * order, so both forms give identical ranks.
+  *
+  * The interpolation is bit-identical to the oracle's: pos =
+  * (n − 1)·q in double, frac = pos − floor(pos), and the value is
+  * v_lo when frac = 0, else v_lo + (v_hi − v_lo)·frac with the
+  * subtraction in the column's own type.
   */
 object Pcts {
   val Quantiles: Seq[(Double, String)] =
     Seq(0.50 -> "p50", 0.95 -> "p95", 0.99 -> "p99")
 
-  /** `global = true`: the caller's group column is a CONSTANT (one
-    * group over the whole frame — ses1's shape). Catalyst folds a
-    * constant partition expression out of the window spec, so the
-    * per-group window silently became a single-partition global window
-    * over the value histogram (value-domain-sized — millions of
-    * distinct ms durations in ONE task at scale, plus the WindowExec
-    * single-partition warning in every entry log). The cumulative
-    * count instead runs through Dist.runningTotal — the repo's
-    * range-partitioned prefix scan — which is parallel at every stage
-    * and bit-identical (exact integer prefix sums over the same total
-    * order). */
-  def groupedExact(df: DataFrame, groupCol: String, valueCol: String,
-                   global: Boolean = false)
-  : DataFrame = {
-    val g = col(groupCol)
-    val hist = df.select(g, col(valueCol).cast("long").as("__v"))
-      .groupBy(groupCol, "__v").agg(count(lit(1)).as("__cnt"))
-    val wCum = Window.partitionBy(groupCol).orderBy(col("__v").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum0 =
-      if (global)
-        graft.Dist.runningTotal(hist, Seq(col("__v").asc), "__cnt")
+  /** Unrounded cut values: one row per group with the group columns,
+    * one double column per `(quantile, name)` pair, then `n`. The
+    * cuts stay unrounded so comparisons against them (banding,
+    * clamping, thresholds) are bit-deterministic. */
+  def cuts(df: DataFrame, groups: Seq[String], valueCol: String,
+           qs: Seq[(Double, String)]): DataFrame = {
+    val gs = groups.map(col)
+    val hist = df.filter(col(valueCol).isNotNull)
+      .groupBy(gs :+ col(valueCol).as("__v"): _*)
+      .agg(count(lit(1)).as("__cnt"))
+    val cum =
+      if (groups.isEmpty) {
+        val c = graft.Dist.runningTotal(hist, Seq(col("__v").asc), "__cnt")
           .withColumnRenamed("__cnt_end", "__cum")
-      else hist.withColumn("__cum", sum("__cnt").over(wCum))
-    val cum = cum0
-      .withColumn("__lo_cum", col("__cum") - col("__cnt"))
-      .localCheckpoint() // joined once per rank probe (lo and hi)
-    val ranks = hist.groupBy(groupCol).agg(sum("__cnt").as("__n"))
-      .select(g, col("__n"), explode(array(Quantiles.map { case (q, nm) =>
-        struct(lit(q).as("q"), lit(nm).as("pct")) }: _*)).as("__qq"))
-      .select(g, col("__n"), col("__qq.q").as("__q"),
-        col("__qq.pct").as("__pct"))
-      .withColumn("__pos", (col("__n") - 1).cast("double") * col("__q"))
-      .withColumn("__lo", floor(col("__pos")))
-      .withColumn("__frac", col("__pos") - col("__lo").cast("double"))
-      .withColumn("__r_lo", col("__lo") + 1)
-      .withColumn("__r_hi",
-        col("__lo") + when(col("__frac") === 0.0, 1).otherwise(2))
-    val loV = ranks.join(cum, Seq(groupCol))
-      .filter(col("__r_lo") > col("__lo_cum") && col("__r_lo") <= col("__cum"))
-      .select(g, col("__pct"), col("__n"), col("__frac"),
-        col("__v").as("__v_lo"))
-    val hiV = ranks.join(cum, Seq(groupCol))
-      .filter(col("__r_hi") > col("__lo_cum") && col("__r_hi") <= col("__cum"))
-      .select(g, col("__pct"), col("__v").as("__v_hi"))
-    val interp = loV.join(hiV, Seq(groupCol, "__pct"))
-      .withColumn("__iv", round(col("__v_lo").cast("double")
-        + (col("__v_hi") - col("__v_lo")).cast("double") * col("__frac"), 6))
-    interp.groupBy(groupCol).agg(
-      max("__n").as("n"),
-      max(when(col("__pct") === "p50", col("__iv"))).as("p50"),
-      max(when(col("__pct") === "p95", col("__iv"))).as("p95"),
-      max(when(col("__pct") === "p99", col("__iv"))).as("p99"))
+        c.crossJoin(broadcast(c.agg(max("__cum").as("__n"))))
+      } else {
+        val w = Window.partitionBy(gs: _*).orderBy(col("__v").asc)
+        hist
+          .withColumn("__cum", sum("__cnt")
+            .over(w.rowsBetween(Window.unboundedPreceding, 0)))
+          .withColumn("__n", sum("__cnt").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      }
+    def pos(n: Column, q: Double): Column = (n - 1).cast("double") * q
+    // the value at 1-based rank r, read from the one bucket holding it
+    def at(r: Column): Column = max(when(
+      col("__cum") - col("__cnt") < r && r <= col("__cum"), col("__v")))
+    val picked = cum.groupBy(gs: _*).agg(
+      // an empty global input still gives its one row: n = 0, null
+      // cuts, as the oracle's count(*) over an empty list
+      coalesce(max("__n"), lit(0L)).as("n"),
+      qs.zipWithIndex.flatMap { case ((q, _), i) =>
+        val lo = floor(pos(col("__n"), q))
+        Seq(at(lo + 1).as(s"__lo$i"), at(lo + 2).as(s"__hi$i"))
+      }: _*)
+    picked.select(gs ++ qs.zipWithIndex.map { case ((q, nm), i) =>
+      val frac = pos(col("n"), q) - floor(pos(col("n"), q)).cast("double")
+      val (lo, hi) = (col(s"__lo$i"), col(s"__hi$i"))
+      when(frac === 0.0, lo).otherwise(lo + (hi - lo) * frac).as(nm)
+    } :+ col("n"): _*)
   }
+
+  /** P50/P95/P99 rounded to 6 dp: groups, p50, p95, p99, n. */
+  def p50p95p99(df: DataFrame, groups: Seq[String],
+                valueCol: String): DataFrame =
+    cuts(df, groups, valueCol, Quantiles).select(groups.map(col) ++
+      Quantiles.map { case (_, nm) => round(col(nm), 6).as(nm) } :+
+      col("n"): _*)
+
+  /** The oracle's unrounded interpolation at quantile `q` over a
+    * sorted DuckDB list `s` of `n` values — the same op order as
+    * `cuts`. Callers round it where their Spark side rounds. */
+  def sql(q: Double): String =
+    s"""CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
+       |  THEN CAST(s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1] AS DOUBLE)
+       |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
+       |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
+       |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
+       |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
+       |  END""".stripMargin
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.MultiModal
+import graft.operators.{MultiModal, Pcts}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -128,40 +128,24 @@ object IngestQueries {
 
   /** mm5_size_pcts — EXACT per-language media-size percentiles
     * (P50/P95/P99 of payload bytes), the storage-planning histogram a
-    * multimodal corpus is partitioned by. Never sorts rows: sizes are
-    * integers, so the per-group distribution collapses to a VALUE
-    * HISTOGRAM (lang, n_bytes, count) — cardinality = distinct sizes,
-    * not documents — and the percentile ranks are read off the
-    * histogram's running count. The per-lang window runs over that
-    * collapsed histogram (thousands of rows per group at any corpus
-    * size), so this stays exact where m4 would approximate, at any
-    * scale. Interpolation is numpy-style linear, the same double op
-    * order as m1/m11: lo + (hi - lo) * frac, integer subtraction
-    * first. */
+    * multimodal corpus is partitioned by, via Pcts.p50p95p99: sizes
+    * collapse to a value histogram (distinct sizes, not documents),
+    * so this stays exact where m4 would approximate, at any scale. */
   def mm5SizePcts(s: SparkSession, d: String): DataFrame =
-    graft.operators.Pcts.groupedExact(
+    Pcts.p50p95p99(
       MultiModal.mediaTable(Tables.documents(s, d))
         .select(col("lang"), length(col("media")).cast("long").as("nb")),
-      "lang", "nb")
+      Seq("lang"), "nb")
       .select("lang", "p50", "p95", "p99")
 
-  val mm5Sql: String = {
-    def interpS(q: Double, as: String): String =
-      s"""round(CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN CAST(s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1] AS DOUBLE)
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END, 6) AS $as""".stripMargin
+  val mm5Sql: String =
     s"""WITH g AS (SELECT lang,
        |             list_sort(list(CAST(octet_length(encode(text)) AS BIGINT))) AS s,
        |             count(*) AS n
        |           FROM documents GROUP BY 1)
        |SELECT lang,
-       |  ${interpS(0.50, "p50")},
-       |  ${interpS(0.95, "p95")},
-       |  ${interpS(0.99, "p99")}
+       |  round(${Pcts.sql(0.50)}, 6) AS p50,
+       |  round(${Pcts.sql(0.95)}, 6) AS p95,
+       |  round(${Pcts.sql(0.99)}, 6) AS p99
        |FROM g""".stripMargin
-  }
 }

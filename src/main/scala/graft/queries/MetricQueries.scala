@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.IrMetrics
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.{IrMetrics, Pcts}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Relevancy + IR-metric query bindings (SURVEY §2.6). The kNN under
@@ -47,78 +47,34 @@ object MetricQueries {
   // ---- m1_latency_pcts ------------------------------------------------
 
   def m1LatencyPcts(s: SparkSession, d: String): DataFrame =
-    IrMetrics.latencyPercentiles(Tables.events(s, d), "event_type", "value")
+    Pcts.p50p95p99(Tables.events(s, d), Seq("event_type"), "value")
+      .select("event_type", "p50", "p95", "p99")
 
-  val m1Sql: String = {
-    def interpS(q: Double, as: String): String =
-      s"""round(CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END, 6) AS $as""".stripMargin
+  val m1Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
        |           FROM events GROUP BY 1)
        |SELECT event_type,
-       |  ${interpS(0.50, "p50")},
-       |  ${interpS(0.95, "p95")},
-       |  ${interpS(0.99, "p99")}
+       |  round(${Pcts.sql(0.50)}, 6) AS p50,
+       |  round(${Pcts.sql(0.95)}, 6) AS p95,
+       |  round(${Pcts.sql(0.99)}, 6) AS p99
        |FROM g""".stripMargin
-  }
 
   // ---- m11_global_pcts ------------------------------------------------
 
   /** EXACT global P50/P95/P99 over the whole value column — the shape
-    * m1's per-group collect_list cannot take globally (one executor
-    * would hold the entire column) and m4's sketch only approximates:
-    * the column goes through Dist.globalRank (range-partition +
-    * parallel per-partition rank + driver-prefix offsets), then ONLY
-    * the ≤6 rows at the interpolation ranks are fetched; the numpy
-    * interpolation arithmetic (m1's formula) runs on those. Everything
-    * distributed is rank bookkeeping; the driver touches a constant
-    * number of rows regardless of scale. */
-  def m11GlobalPcts(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ev = Tables.events(s, d).select(col("event_id"), col("value"))
-    val n = ev.count()
-    val ranked = graft.Dist.globalRank(ev,
-      Seq(col("value").asc, col("event_id").asc), "r")
-    val qs = Seq(0.50 -> "p50", 0.95 -> "p95", 0.99 -> "p99")
-    val needed = qs.flatMap { case (q, _) =>
-      val pos = (n - 1).toDouble * q
-      val lo = math.floor(pos).toLong
-      if (pos - lo == 0.0) Seq(lo + 1) else Seq(lo + 1, lo + 2)
-    }.distinct
-    val vals = ranked.filter(col("r").isin(needed: _*))
-      .select("r", "value").collect()
-      .map(row => row.getLong(0) -> row.getDouble(1)).toMap
-    val rows = qs.map { case (q, name) =>
-      // numpy-style linear interpolation, the exact double op order of
-      // IrMetrics.interpRaw and the oracle text
-      val pos = (n - 1).toDouble * q
-      val lo = math.floor(pos).toLong
-      val frac = pos - lo
-      val base = vals(lo + 1)
-      (name, if (frac == 0.0) base else base + (vals(lo + 2) - base) * frac)
-    }
-    rows.toDF("pct", "raw").select(col("pct"), round(col("raw"), 6).as("value"))
-  }
+    * m4's sketch only approximates: Pcts.p50p95p99 with no group
+    * columns (one global group, its running count range-partitioned),
+    * unpivoted to one (pct, value) row per percentile. */
+  def m11GlobalPcts(s: SparkSession, d: String): DataFrame =
+    Pcts.p50p95p99(Tables.events(s, d), Nil, "value")
+      .select("p50", "p95", "p99")
+      .unpivot(Array.empty[Column], "pct", "value")
 
-  val m11Sql: String = {
-    def interpS(q: Double): String =
-      s"""round(CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END, 6)""".stripMargin
+  val m11Sql: String =
     s"""WITH g AS (SELECT list_sort(list(value)) AS s, count(*) AS n FROM events)
-       |SELECT 'p50' AS pct, ${interpS(0.50)} AS value FROM g
-       |UNION ALL SELECT 'p95' AS pct, ${interpS(0.95)} AS value FROM g
-       |UNION ALL SELECT 'p99' AS pct, ${interpS(0.99)} AS value FROM g""".stripMargin
-  }
+       |SELECT 'p50' AS pct, round(${Pcts.sql(0.50)}, 6) AS value FROM g
+       |UNION ALL SELECT 'p95' AS pct, round(${Pcts.sql(0.95)}, 6) AS value FROM g
+       |UNION ALL SELECT 'p99' AS pct, round(${Pcts.sql(0.99)}, 6) AS value FROM g""".stripMargin
 
   // ---- m7_mad ---------------------------------------------------------
 
@@ -127,31 +83,20 @@ object MetricQueries {
   def m7Mad(s: SparkSession, d: String): DataFrame =
     IrMetrics.madOutliers(Tables.events(s, d), "event_type", "value")
 
-  val m7Sql: String = {
-    // unrounded numpy-style interpolated median over alias s (sorted
-    // list) and n — the same formula as m1's interpS minus the round,
-    // because med/mad feed the threshold comparison un-rounded
-    val raw =
-      """CASE WHEN (n - 1)::DOUBLE * 0.5 - floor((n - 1)::DOUBLE * 0.5) = 0.0
-        |  THEN s[CAST(floor((n - 1)::DOUBLE * 0.5) AS INT) + 1]
-        |  ELSE s[CAST(floor((n - 1)::DOUBLE * 0.5) AS INT) + 1]
-        |     + (s[CAST(floor((n - 1)::DOUBLE * 0.5) AS INT) + 2]
-        |        - s[CAST(floor((n - 1)::DOUBLE * 0.5) AS INT) + 1])
-        |       * ((n - 1)::DOUBLE * 0.5 - floor((n - 1)::DOUBLE * 0.5))
-        |  END""".stripMargin
+  // med/mad stay unrounded: they feed the threshold comparison
+  val m7Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
        |           FROM events GROUP BY 1),
-       |med AS (SELECT event_type, $raw AS med FROM g),
+       |med AS (SELECT event_type, ${Pcts.sql(0.5)} AS med FROM g),
        |d AS (SELECT e.event_type, abs(e.value - m.med) AS dev
        |      FROM events e JOIN med m USING (event_type)),
        |g2 AS (SELECT event_type, list_sort(list(dev)) AS s, count(*) AS n
        |       FROM d GROUP BY 1),
-       |mad AS (SELECT event_type, $raw AS mad FROM g2)
+       |mad AS (SELECT event_type, ${Pcts.sql(0.5)} AS mad FROM g2)
        |SELECT d.event_type, round(min(me.med), 6) AS med, round(min(ma.mad), 6) AS mad,
        |  CAST(sum(CASE WHEN d.dev > 3.0 * 1.4826 * ma.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
        |FROM d JOIN mad ma USING (event_type) JOIN med me USING (event_type)
        |GROUP BY d.event_type""".stripMargin
-  }
 
   // ---- m10_winsorize --------------------------------------------------
 
@@ -162,23 +107,14 @@ object MetricQueries {
       "event_type", "value", 0.05, 0.95)
       .select("event_id", "event_type", "value", "w_value", "is_clamped")
 
-  val m10Sql: String = {
-    def raw(q: String) =
-      s"""CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END""".stripMargin
+  val m10Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
        |           FROM events GROUP BY 1),
-       |cuts AS (SELECT event_type, ${raw("0.05")} AS lo, ${raw("0.95")} AS hi FROM g)
+       |cuts AS (SELECT event_type, ${Pcts.sql(0.05)} AS lo, ${Pcts.sql(0.95)} AS hi FROM g)
        |SELECT e.event_id, e.event_type, e.value,
        |  round(least(greatest(e.value, c.lo), c.hi), 6) AS w_value,
        |  CASE WHEN e.value < c.lo OR e.value > c.hi THEN 1 ELSE 0 END AS is_clamped
        |FROM events e JOIN cuts c USING (event_type)""".stripMargin
-  }
 
   // ---- qd1_quartile_depth ---------------------------------------------
 
@@ -187,19 +123,11 @@ object MetricQueries {
     IrMetrics.quartileDepth(
       Tables.events(s, d).select("event_type", "value"), "event_type", "value")
 
-  val qd1Sql: String = {
-    def raw(q: String) =
-      s"""CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END""".stripMargin
+  val qd1Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
        |           FROM events GROUP BY 1),
-       |cuts AS (SELECT event_type, ${raw("0.25")} AS c1, ${raw("0.50")} AS c2,
-       |                ${raw("0.75")} AS c3 FROM g)
+       |cuts AS (SELECT event_type, ${Pcts.sql(0.25)} AS c1, ${Pcts.sql(0.50)} AS c2,
+       |                ${Pcts.sql(0.75)} AS c3 FROM g)
        |SELECT e.event_type,
        |  CASE WHEN e.value <= c.c1 THEN 0
        |       WHEN e.value <= c.c2 THEN 1
@@ -208,7 +136,6 @@ object MetricQueries {
        |  count(*) AS n_rows
        |FROM events e JOIN cuts c USING (event_type)
        |GROUP BY 1, 2""".stripMargin
-  }
 
   // ---- st2_ks_test ----------------------------------------------------
 

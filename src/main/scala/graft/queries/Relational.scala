@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Pcts
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1340,43 +1341,33 @@ object Relational {
     * session_window sessionization (sw1's declarative arm, which
     * Catalyst merges in-partition before the shuffle — the typed
     * flatMapGroups fold it previously composed cost 6× the wall for
-    * the same histogram): exact integer epoch-ms durations through the
-    * value-histogram percentile operator (Pcts.groupedExact over one
-    * global group — the windowed stage runs over the collapsed
-    * duration histogram, distinct-values-sized, so one group is NOT
-    * one task over the data). Boundary edge follows session_window
+    * the same histogram): exact integer epoch-ms durations through
+    * Pcts.p50p95p99 with no group columns (one global group whose
+    * running count is range-partitioned over the collapsed duration
+    * histogram, so one group is NOT one task over the data).
+    * Boundary edge follows session_window
     * (a gap of exactly 12 h starts a new session); the oracle composes
     * sw1's `>=` SQL accordingly. */
   def ses1SessionPcts(spark: SparkSession, sfDir: String): DataFrame = {
     val dur = sw1NativeSession(spark, sfDir)
       .select((unix_millis(col("session_end"))
-        - unix_millis(col("session_start"))).as("dur_ms"),
-        lit("all").as("grp"))
-    graft.operators.Pcts.groupedExact(dur, "grp", "dur_ms", global = true)
+        - unix_millis(col("session_start"))).as("dur_ms"))
+    Pcts.p50p95p99(dur, Nil, "dur_ms")
       .select(col("n").as("n_sessions"), col("p50"), col("p95"), col("p99"))
   }
 
   // lazy: composes sw1Sql, which is defined later in this object
-  lazy val ses1Sql: String = {
-    def interpS(q: Double, as: String): String =
-      s"""round(CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN CAST(s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1] AS DOUBLE)
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END, 6) AS $as""".stripMargin
+  lazy val ses1Sql: String =
     s"""WITH ses AS ($sw1Sql),
        |d AS (SELECT epoch_ms(session_end) - epoch_ms(session_start) AS dur_ms
        |      FROM ses),
        |gg AS (SELECT list_sort(list(dur_ms)) AS s, CAST(count(*) AS BIGINT) AS n
        |       FROM d)
        |SELECT n AS n_sessions,
-       |  ${interpS(0.50, "p50")},
-       |  ${interpS(0.95, "p95")},
-       |  ${interpS(0.99, "p99")}
+       |  round(${Pcts.sql(0.50)}, 6) AS p50,
+       |  round(${Pcts.sql(0.95)}, 6) AS p95,
+       |  round(${Pcts.sql(0.99)}, 6) AS p99
        |FROM gg""".stripMargin
-  }
 
   // ---- sw1_native_session ---------------------------------------------
 
@@ -3577,10 +3568,9 @@ object Relational {
     * durations are exactly this distribution's tail): per (type, DAY),
     * each event's lateness = running max of arrival-order timestamps
     * minus its own — 0 for in-order arrivals — then exact per-type
-    * P50/P95/P99 lateness via the shared value-histogram percentile
-    * operator. Arrival order is the event_id sequence (the synthetic
-    * corpus's ingest order); the day key bounds every window sort
-    * (e6's pattern). */
+    * P50/P95/P99 lateness via Pcts.p50p95p99. Arrival order is the
+    * event_id sequence (the synthetic corpus's ingest order); the day
+    * key bounds every window sort (e6's pattern). */
   def late1Lateness(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), col("ts").cast("date").as("day"),
@@ -3590,21 +3580,12 @@ object Relational {
       .orderBy(col("event_id").asc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val late = ev.withColumn("late_ms", max("st").over(w) - col("st"))
-    graft.operators.Pcts.groupedExact(
-      late.select(col("event_type"), col("late_ms")), "event_type", "late_ms")
+    Pcts.p50p95p99(late, Seq("event_type"), "late_ms")
       .select(col("event_type"), col("n").as("n_events"),
         col("p50"), col("p95"), col("p99"))
   }
 
-  val late1Sql: String = {
-    def interpS(q: Double, as: String): String =
-      s"""round(CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN CAST(s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1] AS DOUBLE)
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END, 6) AS $as""".stripMargin
+  val late1Sql: String =
     s"""WITH ev AS (SELECT event_type, CAST(ts AS DATE) AS day,
        |              epoch_ms(ts) AS st, event_id FROM events),
        |l AS (SELECT event_type,
@@ -3615,11 +3596,10 @@ object Relational {
        |         CAST(count(*) AS BIGINT) AS n
        |       FROM l GROUP BY 1)
        |SELECT event_type, n AS n_events,
-       |  ${interpS(0.50, "p50")},
-       |  ${interpS(0.95, "p95")},
-       |  ${interpS(0.99, "p99")}
+       |  round(${Pcts.sql(0.50)}, 6) AS p50,
+       |  round(${Pcts.sql(0.95)}, 6) AS p95,
+       |  round(${Pcts.sql(0.99)}, 6) AS p99
        |FROM gg""".stripMargin
-  }
 
   /** seq2_transitions — the user-journey Markov transition matrix:
     * next event type per user via lead() over (ts, event_id), pair
@@ -3830,9 +3810,8 @@ object Relational {
     * each (type, DAY) — the day key bounds every sort to one day's
     * events per type (a per-type-only window drags the full history
     * through one task at 100 TB; the boundary gap dropped per day is
-    * the declared cost) — then EXACT P50/P95/P99 per type via the
-    * value-histogram percentile operator (Pcts.groupedExact — never
-    * sorts rows, m1's interpolation). */
+    * the declared cost) — then EXACT P50/P95/P99 per type via
+    * Pcts.p50p95p99 (never sorts rows, m1's interpolation). */
   def e6Interarrival(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("event_type"), col("ts").cast("date").as("day"),
@@ -3842,21 +3821,12 @@ object Relational {
       .orderBy(col("st").asc, col("event_id").asc)
     val gaps = ev.withColumn("gap", col("st") - lag("st", 1).over(w))
       .filter(col("gap").isNotNull)
-    graft.operators.Pcts.groupedExact(gaps.select(col("event_type"),
-      col("gap")), "event_type", "gap")
+    Pcts.p50p95p99(gaps, Seq("event_type"), "gap")
       .select(col("event_type"), col("n").as("n_gaps"),
         col("p50"), col("p95"), col("p99"))
   }
 
-  val e6Sql: String = {
-    def interpS(q: Double, as: String): String =
-      s"""round(CASE WHEN (n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q) = 0.0
-         |  THEN CAST(s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1] AS DOUBLE)
-         |  ELSE s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1]
-         |     + (s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 2]
-         |        - s[CAST(floor((n - 1)::DOUBLE * $q) AS INT) + 1])
-         |       * ((n - 1)::DOUBLE * $q - floor((n - 1)::DOUBLE * $q))
-         |  END, 6) AS $as""".stripMargin
+  val e6Sql: String =
     s"""WITH ev AS (SELECT event_type, CAST(ts AS DATE) AS day,
        |              epoch_ms(ts) AS st, event_id FROM events),
        |g AS (SELECT event_type,
@@ -3867,11 +3837,10 @@ object Relational {
        |         CAST(count(*) AS BIGINT) AS n
        |       FROM g WHERE gap IS NOT NULL GROUP BY 1)
        |SELECT event_type, n AS n_gaps,
-       |  ${interpS(0.50, "p50")},
-       |  ${interpS(0.95, "p95")},
-       |  ${interpS(0.99, "p99")}
+       |  round(${Pcts.sql(0.50)}, 6) AS p50,
+       |  round(${Pcts.sql(0.95)}, 6) AS p95,
+       |  round(${Pcts.sql(0.99)}, 6) AS p99
        |FROM gg""".stripMargin
-  }
 
   // ---- gs1_grouping_sets ----------------------------------------------
 

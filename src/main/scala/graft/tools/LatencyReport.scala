@@ -51,6 +51,12 @@ object LatencyReport {
     .map(_.toInt)
     .getOrElse(graft.operators.HybridLocalServer.TailBoundedDenseCap)
 
+  /** Nearest-rank percentile of ascending `sorted`: the convention the
+    * committed LATENCY_* files were written with, kept so they stay
+    * comparable. */
+  private def nearestRank(sorted: Seq[Double])(p: Double): Double =
+    sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = args.headOption.getOrElse("/tmp/sf1")
@@ -109,9 +115,7 @@ object LatencyReport {
         .na.fill(0, Seq("rel"))
       val summary = IrMetrics.irSummary(
         IrMetrics.recallPerQuery(judged), IrMetrics.ndcgPerQuery(judged)).head()
-      val sorted = lat.map(_._2).sorted
-      def pct(p: Double) =
-        sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
+      val pct = nearestRank(lat.map(_._2).sorted) _
       System.err.println(f"[latency] $name%-10s n=${lat.size} " +
         f"P50=${pct(0.50)}%8.1f ms P95=${pct(0.95)}%8.1f ms " +
         f"P99=${pct(0.99)}%8.1f ms recall@$K=${summary.getDouble(0)}%.3f " +
@@ -280,9 +284,7 @@ object LatencyReport {
           hits.foreach { case (d, s, r) => out += ((qid, d, s, r)) } })
       val agree = if (batch.isEmpty) 0.0
         else (out & batch).size.toDouble / batch.size
-      val sorted = lat.map(_._2).sorted
-      def pct(p: Double) =
-        sorted(math.min(sorted.length - 1, (p * sorted.length).toInt))
+      val pct = nearestRank(lat.map(_._2).sorted) _
       // ---- tail attribution (r14 verdict task 6): is the 24x P50→P99
       // spread the request's own work (Zipf posting mass / probe-set
       // cardinality) or environmental (GC, scheduling)? Rank-correlate
@@ -314,9 +316,7 @@ object LatencyReport {
       val cands = lat.map { case ((qid, _), _) => stats(qid)._2.toDouble }
       val rhoMass = spearman(ms, mass)
       val rhoCands = spearman(ms, cands)
-      val massSorted = mass.sorted
-      def mpct(p: Double) =
-        massSorted(math.min(massSorted.length - 1, (p * massSorted.length).toInt))
+      val mpct = nearestRank(mass.sorted) _
       val slow = lat.sortBy(-_._2).take(3).map { case ((qid, _), t) =>
         f"""{"query_id":$qid,"ms":$t%.1f,"posting_mass":${stats(qid)._1},""" +
           f""""dense_cands":${stats(qid)._2}}""" }

@@ -90,10 +90,10 @@ class PluggableSeamSpec extends SparkSpec {
     assert(lat.map(_._1) == Seq(3L, 1L, 2L))
     assert(lat.forall(_._2 >= 0.0))
     assert(lat.find(_._1 == 1L).get._2 >= 5.0, "wall-clock must be captured")
-    // the measured table is exactly what latencyPercentiles consumes
-    val p = graft.operators.IrMetrics.latencyPercentiles(
+    // the measured table is exactly what Pcts.p50p95p99 consumes
+    val p = graft.operators.Pcts.p50p95p99(
       lat.toDF("query_id", "latency_ms").withColumn("path", lit("knn")),
-      "path", "latency_ms").head()
+      Seq("path"), "latency_ms").head()
     assert(p.getDouble(1) <= p.getDouble(2) && p.getDouble(2) <= p.getDouble(3),
       "P50 <= P95 <= P99")
   }
