@@ -142,7 +142,7 @@ object IngestQueries {
     s"""WITH g AS (SELECT lang,
        |             list_sort(list(CAST(octet_length(encode(text)) AS BIGINT))) AS s,
        |             count(*) AS n
-       |           FROM documents GROUP BY 1)
+       |           FROM documents WHERE text IS NOT NULL GROUP BY 1)
        |SELECT lang,
        |  round(${Pcts.sql(0.50)}, 6) AS p50,
        |  round(${Pcts.sql(0.95)}, 6) AS p95,

@@ -52,7 +52,7 @@ object MetricQueries {
 
   val m1Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
-       |           FROM events GROUP BY 1)
+       |           FROM events WHERE value IS NOT NULL GROUP BY 1)
        |SELECT event_type,
        |  round(${Pcts.sql(0.50)}, 6) AS p50,
        |  round(${Pcts.sql(0.95)}, 6) AS p95,
@@ -71,7 +71,8 @@ object MetricQueries {
       .unpivot(Array.empty[Column], "pct", "value")
 
   val m11Sql: String =
-    s"""WITH g AS (SELECT list_sort(list(value)) AS s, count(*) AS n FROM events)
+    s"""WITH g AS (SELECT list_sort(list(value)) AS s, count(*) AS n FROM events
+       |           WHERE value IS NOT NULL)
        |SELECT 'p50' AS pct, round(${Pcts.sql(0.50)}, 6) AS value FROM g
        |UNION ALL SELECT 'p95' AS pct, round(${Pcts.sql(0.95)}, 6) AS value FROM g
        |UNION ALL SELECT 'p99' AS pct, round(${Pcts.sql(0.99)}, 6) AS value FROM g""".stripMargin
@@ -86,12 +87,12 @@ object MetricQueries {
   // med/mad stay unrounded: they feed the threshold comparison
   val m7Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
-       |           FROM events GROUP BY 1),
+       |           FROM events WHERE value IS NOT NULL GROUP BY 1),
        |med AS (SELECT event_type, ${Pcts.sql(0.5)} AS med FROM g),
        |d AS (SELECT e.event_type, abs(e.value - m.med) AS dev
        |      FROM events e JOIN med m USING (event_type)),
        |g2 AS (SELECT event_type, list_sort(list(dev)) AS s, count(*) AS n
-       |       FROM d GROUP BY 1),
+       |       FROM d WHERE dev IS NOT NULL GROUP BY 1),
        |mad AS (SELECT event_type, ${Pcts.sql(0.5)} AS mad FROM g2)
        |SELECT d.event_type, round(min(me.med), 6) AS med, round(min(ma.mad), 6) AS mad,
        |  CAST(sum(CASE WHEN d.dev > 3.0 * 1.4826 * ma.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
@@ -109,7 +110,7 @@ object MetricQueries {
 
   val m10Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
-       |           FROM events GROUP BY 1),
+       |           FROM events WHERE value IS NOT NULL GROUP BY 1),
        |cuts AS (SELECT event_type, ${Pcts.sql(0.05)} AS lo, ${Pcts.sql(0.95)} AS hi FROM g)
        |SELECT e.event_id, e.event_type, e.value,
        |  round(least(greatest(e.value, c.lo), c.hi), 6) AS w_value,
@@ -125,7 +126,7 @@ object MetricQueries {
 
   val qd1Sql: String =
     s"""WITH g AS (SELECT event_type, list_sort(list(value)) AS s, count(*) AS n
-       |           FROM events GROUP BY 1),
+       |           FROM events WHERE value IS NOT NULL GROUP BY 1),
        |cuts AS (SELECT event_type, ${Pcts.sql(0.25)} AS c1, ${Pcts.sql(0.50)} AS c2,
        |                ${Pcts.sql(0.75)} AS c3 FROM g)
        |SELECT e.event_type,

@@ -1362,7 +1362,7 @@ object Relational {
        |d AS (SELECT epoch_ms(session_end) - epoch_ms(session_start) AS dur_ms
        |      FROM ses),
        |gg AS (SELECT list_sort(list(dur_ms)) AS s, CAST(count(*) AS BIGINT) AS n
-       |       FROM d)
+       |       FROM d WHERE dur_ms IS NOT NULL)
        |SELECT n AS n_sessions,
        |  round(${Pcts.sql(0.50)}, 6) AS p50,
        |  round(${Pcts.sql(0.95)}, 6) AS p95,
@@ -3594,7 +3594,7 @@ object Relational {
        |      FROM ev),
        |gg AS (SELECT event_type, list_sort(list(late_ms)) AS s,
        |         CAST(count(*) AS BIGINT) AS n
-       |       FROM l GROUP BY 1)
+       |       FROM l WHERE late_ms IS NOT NULL GROUP BY 1)
        |SELECT event_type, n AS n_events,
        |  round(${Pcts.sql(0.50)}, 6) AS p50,
        |  round(${Pcts.sql(0.95)}, 6) AS p95,

@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Registry-level invariants over SparkEntry — the contract the driver
   * consumes. These catch bookkeeping classes of bug that no per-query
@@ -48,5 +51,49 @@ class RegistrySpec extends AnyFunSuite {
       // a twin must be a DIFFERENT row: the tag is a pointer, not a self-loop
       assert(!twins.contains(base), s"$base lists itself as its twin")
     }
+  }
+
+  test("registry row names are distinct") {
+    // a Map literal would keep the last duplicate without a word
+    val dups = SparkEntry.rows.groupBy(_.name).collect {
+      case (n, rs) if rs.size > 1 => n }
+    assert(dups.isEmpty, s"names registered twice: ${dups.toSeq.sorted}")
+  }
+
+  test("exactly cmp1 and v8 are rows-only, each with a reason") {
+    val reasons = SparkEntry.rows.collect { case SparkEntry.Row(n, _, Left(r), _) => n -> r }
+    assert(reasons.map(_._1).toSet ==
+      Set("cmp1_compression", "v8_knn_ivf_kmeans"))
+    assert(reasons.forall(_._2.trim.nonEmpty), s"empty rows-only reason: $reasons")
+  }
+
+  test("bench overrides are exactly the three sketch rows") {
+    val overridden = SparkEntry.rows.filter(_.bench.isDefined).map(_.name).toSet
+    assert(overridden ==
+      Set("m4_approx_pcts", "q12_approx_distinct", "roll1_hll_rollup"))
+    assert(SparkEntry.benchQueries.keySet == SparkEntry.queries.keySet)
+  }
+
+  test("every rung subset and exclusion names a registered row") {
+    val tools = Paths.get("tools")
+    val subsets = Seq("repr50.txt", "repr_sf30.txt", "repr_sf100.txt")
+      .flatMap(f => Files.readAllLines(tools.resolve(f)).asScala)
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+    val exclusions = Files.list(tools).iterator.asScala
+      .filter(_.getFileName.toString.matches("exclusions_.*\\.json"))
+      .toSeq.flatMap(f =>
+        new ObjectMapper().readTree(f.toFile).fieldNames.asScala)
+    assert(subsets.nonEmpty && exclusions.nonEmpty)
+    val unknown = (subsets ++ exclusions).toSet -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"unregistered names: ${unknown.toSeq.sorted}")
+  }
+
+  test("select keeps registry order and rejects an unregistered name") {
+    assert(SparkEntry.select(Nil) == SparkEntry.rows)
+    assert(SparkEntry.select(Seq("q2_filter_agg", "q1_pricing")).map(_.name) ==
+      Seq("q1_pricing", "q2_filter_agg"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q1_pricing", "no_such_query")))
+    assert(e.getMessage.contains("no_such_query"))
   }
 }

@@ -2,9 +2,9 @@
 """Local replica of the driver's correctness gate (SURVEY.md §6).
 
 Runs AFTER `sbt "runMain graft.Verify <sfDir> <outDir>"`:
-for each query dir in <outDir>, read the Spark parquet result and run the
-oracle SQL from oracle_sql.json in DuckDB against the same sf tables,
-then compare THE WAY THE DRIVER DOES — through pandas:
+for each row of <outDir>/registry.json, read the Spark parquet result and
+run the oracle SQL from oracle_sql.json in DuckDB against the same sf
+tables, then compare THE WAY THE DRIVER DOES — through pandas:
   - columns sorted by name, rows sorted with DataFrame.sort_values
     (reproduces the driver's crash on unhashable cells, e.g. arrays);
   - dtype KINDS must match per column (int32 vs int64 passes, but
@@ -14,12 +14,15 @@ then compare THE WAY THE DRIVER DOES — through pandas:
   - values compared exactly; any float cell equal only under tolerance
     is flagged loudly (the driver hashes bits, not tolerances);
   - a pandas typed hash over the sorted frame as the final verdict.
+A row Verify did not mark ok, or whose output holds no parquet file,
+is a failure: a query that threw is never skipped or read stale.
 
 Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
 """
 import json
 import math
 import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -115,46 +118,75 @@ def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> bool:
     return True
 
 
-def main(sf_dir: str, out_dir: str, only=None) -> int:
-    out = Path(out_dir)
-    oracle = json.loads((out / "oracle_sql.json").read_text())
+def connect(sf_dir: str, *settings: str):
+    """DuckDB connection with one view per fixture table, after the
+    given SET statements."""
     con = duckdb.connect()
+    for s in settings:
+        con.execute(s)
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if Path(p).exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
 
-    failures = 0
-    for qdir in sorted(d for d in out.iterdir() if d.is_dir()):
-        name = qdir.name
-        if only and name not in only:
-            continue
-        sdf = con.execute(f"SELECT * FROM '{qdir}/*.parquet'").df()
-        if name not in oracle:
-            print(f"[rows-only] {name}: {len(sdf)} rows "
-                  f"({'OK' if len(sdf) else 'EMPTY!'})")
-            if not len(sdf):
-                failures += 1
-            continue
-        try:
-            odf = con.execute(oracle[name]).df()
-        except (duckdb.OutOfMemoryException, MemoryError) as e:
-            # ORACLE-side resource exhaustion is its own class: the
-            # Spark result exists and may be perfectly correct — the
-            # checker, not the engine, hit an environment limit (the
-            # g1/v12 recursive-SQL spill at sf1). Distinct tag so a
-            # driver/grader can adjudicate it separately from a wrong
-            # answer; still counted as not-green here.
-            print(f"[ORACLE-RESOURCE-FAIL] {name}: oracle exceeded "
-                  f"checker resources (Spark rows={len(sdf)}): {e}")
-            failures += 1
-            continue
-        except Exception as e:
-            print(f"[FAIL] {name}: oracle SQL error: {e}")
-            failures += 1
-            continue
-        if not compare(name, sdf, odf):
-            failures += 1
+
+def verdict(con, out: Path, row: dict, oracle: dict, reason=None) -> dict:
+    """Check one registry row; print its one-line verdict and return
+    {"status": pass | rows_only | excluded | fail, ...}. `reason` names
+    an oracle exclusion: the Spark output is then checked rows-only."""
+    name, qdir = row["name"], out / row["name"]
+    if row["status"] != "ok":
+        err = f"Verify status {row['status']}: {row.get('error', '')}"[:300]
+        print(f"[FAIL] {name}: {err}")
+        return {"status": "fail", "error": err}
+    if not list(qdir.glob("*.parquet")):
+        print(f"[FAIL] {name}: no parquet output in {qdir}")
+        return {"status": "fail", "error": "no parquet output"}
+    t0 = time.time()
+    sdf = con.execute(f"SELECT * FROM '{qdir}/*.parquet'").df()
+    n = len(sdf)
+    if reason is not None or not row["oracle"]:
+        tag = "excluded" if reason is not None else "rows-only"
+        print(f"[{tag}] {name}: {n} rows ({'OK' if n else 'EMPTY!'})"
+              + (f" — {reason[:60]}..." if reason else ""))
+        v = {"status": tag.replace("-", "_") if n else "fail", "rows": n}
+        return {**v, "reason": reason} if reason else v
+    try:
+        odf = con.execute(oracle[name]).df()
+    except (duckdb.OutOfMemoryException, MemoryError) as e:
+        # ORACLE-side resource exhaustion is its own class: the
+        # Spark result exists and may be perfectly correct — the
+        # checker, not the engine, hit an environment limit (the
+        # g1/v12 recursive-SQL spill at sf1). Distinct tag so a
+        # driver/grader can adjudicate it separately from a wrong
+        # answer; still counted as not-green here.
+        print(f"[ORACLE-RESOURCE-FAIL] {name}: oracle exceeded "
+              f"checker resources (Spark rows={n}): {e}")
+        return {"status": "fail", "rows": n,
+                "error": f"oracle resources: {e}"[:300]}
+    except Exception as e:
+        print(f"[FAIL] {name}: oracle SQL error: {e}")
+        return {"status": "fail", "rows": n, "error": f"oracle error: {e}"[:300]}
+    ok = compare(name, sdf, odf)
+    return {"status": "pass" if ok else "fail", "rows": n,
+            "oracle_sec": round(time.time() - t0, 1)}
+
+
+def gate(con, out: Path, want=lambda name: True, exclude=None):
+    """Yield (name, verdict) for each row of <out>/registry.json that
+    `want` accepts, in registry order."""
+    oracle = json.loads((out / "oracle_sql.json").read_text())
+    for row in json.loads((out / "registry.json").read_text()):
+        if want(row["name"]):
+            yield row["name"], verdict(con, out, row, oracle,
+                                       (exclude or {}).get(row["name"]))
+
+
+def main(sf_dir: str, out_dir: str, only=None) -> int:
+    verdicts = gate(connect(sf_dir), Path(out_dir),
+                    lambda name: not only or name in only)
+    failures = sum(v["status"] == "fail" for _, v in verdicts)
     print(f"\n{failures} failure(s)")
     return 1 if failures else 0
 

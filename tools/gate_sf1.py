@@ -8,7 +8,7 @@ Runs AFTER:
 Then:
   python3 tools/gate_sf1.py /tmp/sf1 /tmp/verify_sf1 CORRECTNESS_sf1.json
 
-Same comparison as tools/check.py (imported), plus:
+Same registry-driven comparison as tools/check.py (imported), plus:
   - a per-query status JSON artifact for the round record;
   - NAMED exclusions for oracles that exceed the sandbox's disk: the
     g1/v12 DuckDB recursive/hybrid SQL spills >79 GB temp at sf1 (the
@@ -20,12 +20,10 @@ Same comparison as tools/check.py (imported), plus:
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).parent))
 import check  # noqa: E402
-import duckdb  # noqa: E402
 
 # r10 carried 4 oracle-resource exclusions here (g1/v12/kc1/rk1: the
 # 10x-verbatim-copy fixture squared the near-dup pair graph and their
@@ -33,37 +31,33 @@ import duckdb  # noqa: E402
 # fixture de-degeneration (make_sf1.py per-copy token suffixing) plus
 # the MATERIALIZED-CTE oracle fixes close ALL of them at sf1, so the
 # base set ships EMPTY. Per-rung exclusions (sf10's brute-force tiers)
-# live in a JSON file passed as argv[4] — every entry must carry a
-# named reason, and an excluded name with no Spark dump is still
-# recorded (rows: null) so the artifact accounts for the full subset.
+# live in a JSON file named by GRAFT_GATE_EXCLUSIONS — every entry
+# must carry a named reason. An excluded row's Spark output is still
+# checked rows-only, so a failed or missing dump fails the gate.
 EXCLUDE: dict = {}
 
 
 def main(sf_dir: str, out_dir: str, artifact: str,
          shard: int = 0, nshards: int = 1) -> int:
-    out = Path(out_dir)
-    oracle = json.loads((out / "oracle_sql.json").read_text())
     # per-rung named exclusions (env GRAFT_GATE_EXCLUSIONS = json file
     # of {query: reason}) merge into the base set
     excl_path = os.environ.get("GRAFT_GATE_EXCLUSIONS")
     if excl_path:
         EXCLUDE.update(json.loads(Path(excl_path).read_text()))
-    con = duckdb.connect()
     # threads/memory tunable per rung: the v19 sf10 oracle's 426M-key
     # aggregate overshot the 48GB limit to ~100GB RSS (DuckDB's
     # high-cardinality agg accounting) and drew the kernel OOM killer —
     # a TIGHTER limit forces earlier radix spill and survives.
-    con.execute(f"SET threads={os.environ.get('GRAFT_GATE_THREADS', '16')}")
-    con.execute(f"SET memory_limit='{os.environ.get('GRAFT_GATE_MEM', '48GB')}'")
-    con.execute("SET temp_directory='/tmp/duckdb_gate_spill'")
-    con.execute("SET preserve_insertion_order=false")
-    for t in check.TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if Path(p).exists():
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    con = check.connect(
+        sf_dir,
+        f"SET threads={os.environ.get('GRAFT_GATE_THREADS', '16')}",
+        f"SET memory_limit='{os.environ.get('GRAFT_GATE_MEM', '48GB')}'",
+        "SET temp_directory='/tmp/duckdb_gate_spill'",
+        "SET preserve_insertion_order=false")
 
-    # resumable: re-running skips queries already recorded, so the gate
-    # can chase a still-running Verify and only check new results
+    # resumable: re-running re-checks only rows not yet recorded or
+    # recorded as fail (a row Verify has not finished is a fail), so
+    # the gate can chase a still-running Verify
     statuses = {}
     if Path(artifact).exists():
         prior = json.loads(Path(artifact).read_text()).get("queries", {})
@@ -97,62 +91,13 @@ def main(sf_dir: str, out_dir: str, artifact: str,
         tmp.replace(Path(artifact))
         return summary
 
-    for qdir in sorted(d for d in out.iterdir() if d.is_dir()):
-        name = qdir.name
-        if sum(ord(c) for c in name) % nshards != shard:
-            continue
-        prior = statuses.get(name)
-        if prior is not None and prior.get("status") != "fail" and not (
-                # a no-dump excluded backfill row (rows: null) upgrades
-                # to a real rows count once its Spark dump lands — the
-                # blanket resume skip used to freeze it at null forever
-                prior.get("status") == "excluded"
-                and prior.get("rows") is None):
-            continue
-        if not list(qdir.glob("*.parquet")):
-            continue  # Verify may still be writing this one
-        print(f"[gate] checking {name} ...", flush=True)
-        t0 = time.time()
-        sdf = con.execute(f"SELECT * FROM '{qdir}/*.parquet'").df()
-        if name in EXCLUDE:
-            ok = len(sdf) > 0
-            statuses[name] = {
-                "status": "excluded" if ok else "fail",
-                "rows": len(sdf), "reason": EXCLUDE[name]}
-            flush()
-            print(f"[excluded] {name}: {len(sdf)} rows "
-                  f"({'OK' if ok else 'EMPTY!'}) — {EXCLUDE[name][:60]}...")
-            continue
-        if name not in oracle:
-            ok = len(sdf) > 0
-            statuses[name] = {"status": "rows_only" if ok else "fail",
-                              "rows": len(sdf)}
-            flush()
-            print(f"[rows-only] {name}: {len(sdf)} rows "
-                  f"({'OK' if ok else 'EMPTY!'})")
-            continue
-        try:
-            odf = con.execute(oracle[name]).df()
-        except Exception as e:
-            statuses[name] = {"status": "fail",
-                              "error": f"oracle error: {e}"[:300]}
-            flush()
-            print(f"[FAIL] {name}: oracle error: {e}")
-            continue
-        ok = check.compare(name, sdf, odf)
-        statuses[name] = {"status": "pass" if ok else "fail",
-                          "rows": len(sdf),
-                          "oracle_sec": round(time.time() - t0, 1)}
-        flush()
+    def want(name: str) -> bool:
+        return (sum(ord(c) for c in name) % nshards == shard
+                and statuses.get(name, {}).get("status", "fail") == "fail")
 
-    # an excluded query whose Spark dump never materialized (e.g. the
-    # run hit a node-resource limit) still gets a named row — the
-    # artifact must account for the whole subset, not silently shrink
-    for name, reason in EXCLUDE.items():
-        if name not in statuses:
-            statuses[name] = {"status": "excluded", "rows": None,
-                              "reason": reason}
-            print(f"[excluded] {name}: no dump — {reason[:70]}...")
+    for name, v in check.gate(con, Path(out_dir), want, EXCLUDE):
+        statuses[name] = v
+        flush()
 
     summary = flush()
     print(f"\n{summary['pass']}/{summary['n']} pass, "
