@@ -80,11 +80,42 @@ object LocalServe {
     s
   }
 
-  /** Spark Round(HALF_UP) semantics on double — BigDecimal.valueOf
-    * (shortest decimal), NOT new BigDecimal(double). */
+  // 10^s for s = 0..22: every one is exact in a double
+  private val Pow10: Array[Double] = Array.iterate(1.0, 23)(_ * 10.0)
+  private val FastMax = 4503599627370496.0 // 2^52
+
+  /** Spark Round(HALF_UP) semantics on double: the HALF_UP rounding of
+    * `BigDecimal.valueOf(x)` (x's shortest decimal D, NOT new
+    * BigDecimal(double)) back to double; NaN and ±Inf come back
+    * unchanged, as Spark's Round returns them.
+    *
+    * The fast path is exact. Let a = fl(|x|·10^s), with 10^s exact.
+    * D lies within half an ulp of x, so |D|·10^s lies within
+    * 10^s·ulp(x)/2 ≈ 2^-53·a, about one ulp(a), of |x|·10^s, which
+    * the multiply rounds by at most ulp(a)/2: a is within 2 ulp(a)
+    * of |D|·10^s (a subnormal x gives a far below .5 and n = 0).
+    * When a < 2^52 (so floor and fraction are exact) and a's
+    * fraction is more than 4 ulp(a) from .5, no half-integer lies
+    * between a and |D|·10^s, so both round to the same integer n.
+    * The BigDecimal path then yields ±n·10^-s as a double, which is
+    * the correctly rounded quotient n / 10^s (BigDecimal.doubleValue
+    * divides the same exact integer and power of ten, or parses the
+    * decimal): exactly what the division below returns. A zero n is
+    * +0.0 on both paths. Every other input takes the BigDecimal
+    * path. */
   def round(x: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+    if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x
+    else {
+      val a = if (scale >= 0 && scale < Pow10.length) math.abs(x) * Pow10(scale) else FastMax
+      val f = math.floor(a)
+      val frac = a - f
+      if (a < FastMax && math.abs(frac - 0.5) > 4 * Math.ulp(a)) {
+        val n = if (frac > 0.5) f + 1.0 else f
+        if (n == 0.0) 0.0 else if (x < 0) -(n / Pow10(scale)) else n / Pow10(scale)
+      } else
+        java.math.BigDecimal.valueOf(x)
+          .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
+    }
 
   /** Sign-LSH bucket of one vector under one table of hyperplanes:
     * bit i is set iff the vector's dot fold against `planes(i)` is
@@ -155,6 +186,9 @@ object LocalServe {
         ids(0) = id; scs(0) = sc
         down(n)
       }
+
+    /** The kept ids, in heap order (leaves the heap as it is). */
+    def keptIds(): Array[Long] = java.util.Arrays.copyOf(ids, n)
 
     /** The kept candidates, best first (empties the heap). */
     def result(): Array[(Long, Double)] = {

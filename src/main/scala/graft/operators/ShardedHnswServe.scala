@@ -19,19 +19,19 @@ import org.apache.spark.sql.functions.{col, hash, lit, pmod}
   * the hop/beam schedule, the global entry point) replicates.
   *
   * The router drives the one walk (HnswLocalServer.walk, which the
-  * single node runs as a one-shard fleet); shards answer the two
-  * per-hop lookups a walk is made of:
+  * single node runs as a one-shard fleet); shards answer the owner-
+  * scoped point lookups a walk is made of:
   *  - adjacency: every cursor's out-neighbors come from the one shard
   *    owning that node (others return nothing) — per hop that ships
   *    O(beam · M) ids, KBs on a wire;
   *  - scoring: each candidate's cosine comes from the one shard
   *    owning its vector, computed with the identical sequential dot
   *    fold — so scores are placement-independent and the router's
-  *    merge order cannot change them.
-  * Per layer-0 hop that is two fan-outs (neighbors, then scores of
-  * the deduped frontier) — the real RPC shape of a distributed graph
-  * walk; upper-layer descent is width-1 so those hops ship single
-  * ids. Because the single node runs the same walk, results are
+  *    merge order cannot change them. The router memoizes each
+  *    cosine for the rest of the request, so a vector is scored once
+  *    however many hops reach it.
+  * Upper-layer descent is width-1, so those hops ship single ids.
+  * Because the single node runs the same walk, results are
   * bit-identical to the single-node serve — ShardedHnswServeSpec pins
   * parity with HnswLocalServer (itself pinned bit-exact to the
   * distributed hg2 walk) plus the over-ceiling unlock.

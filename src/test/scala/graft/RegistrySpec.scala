@@ -86,6 +86,22 @@ class RegistrySpec extends AnyFunSuite {
     assert(subsets.nonEmpty && exclusions.nonEmpty)
     val unknown = (subsets ++ exclusions).toSet -- SparkEntry.queries.keySet
     assert(unknown.isEmpty, s"unregistered names: ${unknown.toSeq.sorted}")
+    // the gate checks only the rung's subset, so an exclusion outside it
+    // excludes nothing; the rung -> subset map is run_rung.sh's own
+    val rungs = "(?m)^\\s*(sf\\d+)\\)\\s*\\n(?:\\s*#.*\\n)*\\s*COPIES=\\d+ REPR=tools/(\\S+)".r
+      .findAllMatchIn(new String(Files.readAllBytes(tools.resolve("run_rung.sh"))))
+      .map(m => m.group(1) -> m.group(2)).toMap
+    assert(rungs == Map("sf10" -> "repr50.txt", "sf30" -> "repr_sf30.txt",
+      "sf100" -> "repr_sf100.txt"), s"run_rung.sh rungs: $rungs")
+    rungs.foreach { case (rung, subset) =>
+      val names = Files.readAllLines(tools.resolve(subset)).asScala
+        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSet
+      val excluded = new ObjectMapper()
+        .readTree(tools.resolve(s"exclusions_$rung.json").toFile).fieldNames.asScala.toSet
+      val outside = excluded -- names
+      assert(outside.isEmpty, s"exclusions_$rung.json names rows outside " +
+        s"$subset: ${outside.toSeq.sorted}")
+    }
   }
 
   test("select keeps registry order and rejects an unregistered name") {
